@@ -81,54 +81,6 @@ object ProbeFloor {
       }
     }
 
-    if (args.contains("--exp37a")) {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      val want = spark.sparkContext.defaultParallelism
-      def timeIt(label: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
-        mk.write.format("noop").mode("overwrite").save() // warm
-        val ts = (1 to 5).map { _ =>
-          val t0 = System.nanoTime()
-          mk.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"EXP37A $label%-12s med=${ts.sorted.apply(2)}%6.3f " +
-          ts.map(t => f"$t%.3f").mkString(" "))
-      }
-      timeIt("current") {
-        graft.queries.Analytics.queries("q37a_sketch_exact")(spark, sfDir)
-      }
-      timeIt("reparted") {
-        val l = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        val hist = l
-          .select(col("l_returnflag"), col("l_extendedprice"))
-          .repartition(want, col("l_returnflag"), col("l_extendedprice"))
-          .groupBy(col("l_returnflag"), col("l_extendedprice"))
-          .agg(count(lit(1)).as("c"))
-          .withColumn("cum", sum(col("c")).over(
-            Window.partitionBy(col("l_returnflag"))
-              .orderBy(col("l_extendedprice"))))
-          .withColumn("n",
-            sum(col("c")).over(Window.partitionBy(col("l_returnflag"))))
-        def atQ(p: Double) =
-          min(when(col("cum") >= ceil(col("n") * lit(p)), col("l_extendedprice")))
-        val quantiles = hist.groupBy(col("l_returnflag"))
-          .agg(atQ(0.25).as("p25_price"), atQ(0.50).as("median_price"),
-            atQ(0.75).as("p75_price"))
-        val nrows = hist.groupBy(col("l_returnflag"))
-          .agg(sum(col("c")).as("n_rows"))
-        val orders = l.select(col("l_returnflag"), col("l_orderkey"))
-          .repartition(want, col("l_returnflag"), col("l_orderkey"))
-          .distinct()
-          .groupBy(col("l_returnflag"))
-          .agg(count(col("l_orderkey")).as("exact_orders"))
-        nrows.join(orders, "l_returnflag").join(quantiles, "l_returnflag")
-          .select(col("l_returnflag"), col("n_rows"), col("exact_orders"),
-            col("p25_price"), col("median_price"), col("p75_price"))
-          .orderBy(col("l_returnflag"))
-      }
-    }
-
     // --scans: plan-SHAPE census over every declared query (guide
     // §7.2) — counts the physical plan's scan leaves, exchanges,
     // generates (explodes) and checkpoint reads without executing the

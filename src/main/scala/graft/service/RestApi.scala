@@ -102,8 +102,16 @@ final class RestApi(spark: Option[SparkSession], port: Int = 0) {
     ex.close()
   }
 
+  /** A JSON string body: quote, backslash and the control characters
+    * U+0000–U+001F escaped, so a multi-line exception message still
+    * makes a valid error body. */
   private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
 
   /** Minimal field extractor for the flat request bodies we accept —
     * mirrors pydantic's int coercion for {"number": n}. */

@@ -19,6 +19,31 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object ArtifactStore {
 
+  /** Read-through memo of a driver-side value derived from a published
+    * artifact: get → compute OUTSIDE any lock → putIfAbsent.
+    * `computeIfAbsent` would run a full Spark job while holding the
+    * map's bin lock, so an unrelated request hashing to the same bin
+    * blocks behind a histogram scan or a BPE training (review finding,
+    * r15). The loser of a compute race discards its (deterministic,
+    * artifact-backed) value — strictly cheaper than serializing every
+    * miss. Callers key by content-addressed artifact path (one entry
+    * per corpus / lake version), so a hit can never be stale; a
+    * long-lived server accretes entries, and the size cap bounds that
+    * by resetting the map — entries are re-readable from their
+    * artifacts, so eviction costs a memo miss, never a retrain. */
+  def memo[K, V <: AnyRef](
+      cache: java.util.concurrent.ConcurrentHashMap[K, V], key: K)(
+      f: => V): V = {
+    val hit = cache.get(key)
+    if (hit != null) hit
+    else {
+      val v = f
+      if (cache.size >= 64) cache.clear()
+      val prev = cache.putIfAbsent(key, v)
+      if (prev != null) prev else v
+    }
+  }
+
   /** The artifact at `out`, if a completed publish exists there —
     * never builds. The probe incremental maintenance runs against its
     * previous version ([[graft.queries.Dedup.windowIndexAt]]): a
@@ -139,6 +164,20 @@ object ArtifactStore {
         .option("path", staging.toString)
         .saveAsTable(stageTable)
       spark.sql(s"DROP TABLE IF EXISTS $stageTable") // external: files stay
+      // an empty frame writes no bucket file at all, so no reader could
+      // infer the schema: publish one empty, schema-bearing bucket-0 file
+      if (!fs.listStatus(staging).exists(_.getPath.getName.endsWith(".parquet"))) {
+        val empty = new Path(outPath.getParent,
+          s".empty-${outPath.getName}-${java.util.UUID.randomUUID}")
+        spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            frame.schema)
+          .write.parquet(empty.toString)
+        fs.listStatus(empty).filter(_.getPath.getName.endsWith(".parquet"))
+          .foreach(f => fs.rename(f.getPath,
+            new Path(staging, "part-00000-empty_00000.c000.parquet")))
+        fs.delete(empty, true)
+      }
       fs.mkdirs(outPath.getParent)
       if (fs.exists(outPath) && !fs.exists(new Path(outPath, "_SUCCESS")))
         fs.delete(outPath, true)

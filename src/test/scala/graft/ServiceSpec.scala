@@ -336,6 +336,9 @@ class ServiceSpec extends AnyFunSuite {
         .toJSON.collect().mkString("[", ",", "]")
       assert(body == expect, "HTTP rows diverged from the library seam")
       assert(body.contains("\"rank\":1"), s"no ranked rows: $body")
+      // a wrong-width vector is the library's IllegalArgumentException
+      val (c2, b2) = http("GET", s"$base/knn?dir=$dir&vec=${v0.drop(1).mkString(",")}")
+      assert(c2 == 422 && b2.contains("dimensional"), b2)
     } finally api.stop()
   }
 
@@ -406,6 +409,22 @@ class ServiceSpec extends AnyFunSuite {
         .toJSON.collect().mkString("[", ",", "]")
       assert(body == expect, "HTTP rows diverged from the library seam")
       assert(body.contains("\"rank\":1"), s"no ranked rows: $body")
+    } finally api.stop()
+  }
+
+  test("a multi-line error message still makes a valid JSON error body") {
+    val spark = SparkSpec.spark
+    val api = new RestApi(Some(spark), 0).start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      // a dir that does not exist, with a newline and a tab in its name:
+      // the failure message quotes it verbatim
+      val (code, body) =
+        http("GET", s"$base/search?dir=/no/such%0Adir%09here&q=x")
+      assert(code == 500, body)
+      val detail = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(body).get("detail").asText()
+      assert(detail.contains("such\ndir\there"), detail)
     } finally api.stop()
   }
 

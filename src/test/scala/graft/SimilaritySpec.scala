@@ -400,6 +400,112 @@ class SimilaritySpec extends SparkSpec {
       s"ad-hoc ranking diverged from the registry query: $rest vs $q0")
   }
 
+  /** The multi-query probe plan `searchKnn` ran before its
+    * single-query rewrite — probes by a `query_id` window over a
+    * centroid cross join, candidates by a broadcast join, ranks by a
+    * second window — kept here as the reference the single-query plan
+    * must equal row for row. */
+  private def multiQueryKnn(dir: String, qvec: Array[Float], topK: Int,
+      probeCells: Int): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.expressions.Window
+    import graft.functions.VectorOps._
+    val base = Similarity.versionedVectors(spark, dir)
+    val v = graft.sources.Versioned.currentVersion(spark, base).get
+    val origin = Similarity.ivfIndexAt(spark, base, 1L)
+    val idx = Similarity.ivfIndexAt(spark, base, v)
+    val queries = Seq(Tuple1(qvec.toSeq)).toDF("embedding")
+      .withColumn("q6", vector_quantize(col("embedding")))
+      .select(lit(-1L).as("query_id"), col("q6").as("qq6"),
+        normQ(dot_long(col("q6"), col("q6"))).as("qn"))
+    val cents = origin.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("c_label"), col("q6").as("c6"),
+        col("nrm").as("cn"))
+    val probes = queries.crossJoin(broadcast(cents))
+      .withColumn("sim",
+        cosineQ(dot_long(col("qq6"), col("c6")), col("qn"), col("cn")))
+      .withColumn("rn", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("sim").desc, col("c_label").desc)))
+      .filter(col("rn") <= probeCells)
+      .select(col("query_id"), col("qq6"), col("qn"), col("c_label").as("cell"))
+    idx.join(broadcast(probes), "cell")
+      .filter(col("vec_id") =!= col("query_id"))
+      .withColumn("cosine",
+        cosineQ(dot_long(col("qq6"), col("q6")), col("qn"), col("nrm")))
+      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("cosine").desc, col("vec_id"))))
+      .filter(col("rank") <= topK)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("rank").cast("long").as("rank"), round(col("cosine"), 9).as("cosine"))
+      .orderBy(col("query_id"), col("rank"))
+      .collect().map(_.toSeq).toSeq
+  }
+
+  private def knnRows(dir: String, qvec: Array[Float], topK: Int,
+      probeCells: Int = 2): Seq[Seq[Any]] =
+    Similarity.searchKnn(spark, dir, qvec, topK, probeCells)
+      .collect().map(_.toSeq).toSeq
+
+  test("searchKnn's single-query plan ≡ the multi-query reference plan") {
+    val vecs = Tables(spark, sfDir, "embeddings").orderBy("vec_id")
+      .select("embedding").collect().map(_.getSeq[Float](0).toArray)
+    val rnd = new scala.util.Random(5)
+    (1 to 12).foreach { i =>
+      val v = vecs(rnd.nextInt(vecs.length))
+        .map(x => (x + rnd.nextGaussian() * 0.01).toFloat)
+      val k = if (i % 4 == 0) 10000 else 5
+      val got = knnRows(sfDir, v, k)
+      assert(got.nonEmpty && got == multiQueryKnn(sfDir, v, k, 2),
+        s"vector $i, top-$k diverged from the reference plan")
+    }
+    // a wrong-width vector is refused (a 422 on /knn), never truncated
+    intercept[IllegalArgumentException](
+      Similarity.searchKnn(spark, sfDir, vecs(0).drop(1)))
+    // a zero vector divides by a zero norm: DIVIDE_BY_ZERO under ANSI,
+    // NULL similarities (cells by label, neighbors by vec_id) without
+    val zero = Array.fill(vecs(0).length)(0f)
+    Seq(intercept[Exception](knnRows(sfDir, zero, 5)),
+        intercept[Exception](multiQueryKnn(sfDir, zero, 5, 2)))
+      .foreach(e => assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e.getMessage))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      val got = knnRows(sfDir, zero, 5)
+      assert(got.nonEmpty && got == multiQueryKnn(sfDir, zero, 5, 2),
+        "zero vector diverged from the reference plan without ANSI")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("searchKnn: tied centroid similarities pick the highest labels, as the reference plan does") {
+    import java.nio.file.Files
+    // codebook candidates vec_ids 0–9 are the unit axes ±e_i, so a
+    // query on a diagonal ties exactly across several centroids
+    val dir = Files.createTempDirectory("graft-knn-tie").toString
+    val axes = (0 until 10).map { i =>
+      val a = Array.fill(5)(0f); a(i % 5) = if (i < 5) 1f else -1f
+      (i.toLong, a, 0)
+    }
+    val points = (10 until 60).map { i =>
+      (i.toLong, Array.tabulate(5)(j => (((i * 7 + j * 13) % 11) - 5) / 4f), 1)
+    }
+    (axes ++ points).toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    Seq(Array(1f, 1f, 1f, 1f, 1f), Array(1f, 1f, 0f, 0f, 0f),
+        Array(0f, 0f, 0f, 1f, -1f)).foreach { v =>
+      val got = knnRows(dir, v, 8, probeCells = 3)
+      assert(got.nonEmpty && got == multiQueryKnn(dir, v, 8, 3),
+        s"tied query ${v.mkString(",")} diverged from the reference plan")
+    }
+  }
+
+  test("searchKnn: a warm search runs exactly one Spark job") {
+    val v0 = Tables(spark, sfDir, "embeddings").filter(col("vec_id") === 7L)
+      .select("embedding").collect().head.getSeq[Float](0).toArray
+    Similarity.searchKnn(spark, sfDir, v0).collect() // warm: memoized codebook
+    val (rows, jobs) = jobsOf(Similarity.searchKnn(spark, sfDir, v0).collect())
+    assert(rows.nonEmpty, "fixture vacuous — no neighbors")
+    assert(jobs == 1, s"a warm kNN search ran $jobs jobs")
+  }
+
   test("q102: dominance keep rule — pruned_by earlier, same cell, above threshold") {
     val out = Similarity.q102SemanticDedup(spark, sfDir).collect()
     assert(out.length == Tables(spark, sfDir, "embeddings").count())

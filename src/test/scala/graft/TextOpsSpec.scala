@@ -1328,6 +1328,100 @@ class TextOpsSpec extends SparkSpec {
       l3.collect().forall(r => !gone.contains(r.getLong(0))),
       "a removed doc survived in the length artifact")
   }
+  /** The lake's current version and its grain, the inputs of both
+    * BM25 serving paths. */
+  private def currentGrain(dir: String) = {
+    import graft.queries.Dedup
+    import graft.sources.Versioned
+    val base = Dedup.versionedCorpus(spark, dir)
+    val v = Versioned.currentVersion(spark, base).get
+    (base, v, TextOps.tfGrainAt(spark, base, v))
+  }
+
+  test("searchBm25's single-query plan ≡ bm25RankQueries on edge cases") {
+    val (_, _, tf) = currentGrain(sfDir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    def same(q: String, k: Int = 10) = {
+      val single = rows(TextOps.searchBm25(spark, sfDir, q, k))
+      val multi = rows(TextOps.bm25RankQueries(tf,
+        Some(TextOps.userQueryTerms(spark, q)), k))
+      assert(single == multi, s"'$q' top-$k diverged from the multi-query path")
+      single
+    }
+    val vocab = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      .orderBy(col("df").desc, col("term")).collect()
+      .map(r => r.getString(0) -> r.getLong(1))
+    val Seq(t0, t1) = vocab.take(2).map(_._1).toSeq
+    // duplicated and unknown terms; an all-unknown query
+    assert(same(s"$t0 $t0 zz__never__zz $t1").nonEmpty)
+    assert(same("zz__never__zz yy__never__yy").isEmpty)
+    // non-ASCII: the rendered query sorts terms by UTF-8 bytes, as
+    // sort_array does — U+1F600 after U+FF5A, though its UTF-16
+    // surrogates sort before it
+    val mixed = same(s"$t1 ｚ \uD83D\uDE00 é Ω")
+    assert(mixed.nonEmpty && mixed.head(1).toString.endsWith("ｚ \uD83D\uDE00"),
+      s"rendered query ${mixed.headOption.map(_(1))}")
+    // score ties break on doc_id, also when the top-K cut falls inside
+    // a tie: rank every term as its own query, find an adjacent tie
+    val perTerm = TextOps.bm25RankQueries(tf,
+        Some(vocab.take(100).map(_._1).toSeq.zipWithIndex
+          .map { case (t, i) => (i.toLong, t) }.toDF("query_id", "term")),
+        1000).collect()
+    val tie = perTerm.groupBy(_.getLong(0)).values
+      .flatMap(rs => rs.sortBy(_.getLong(2)).sliding(2)
+        .collectFirst { case Array(a, b) if a.getLong(4) == b.getLong(4) =>
+          (a.getString(1), a.getLong(2).toInt) })
+      .headOption
+    assert(tie.nonEmpty, "fixture vacuous — no tied scores")
+    tie.foreach { case (term, cut) => same(term, cut); same(term, cut + 1) }
+    // topK larger than the candidate set
+    val all = same(t1, 100000)
+    assert(all.size == vocab.find(_._1 == t1).get._2)
+  }
+
+  test("searchBm25 on an empty corpus version (nd = 0) returns no rows") {
+    // Spark runs ANSI by default: an inlined `totlen DIV nd` literal
+    // with nd = 0 would fail at constant folding
+    val dir = Files.createTempDirectory("graft-empty-corpus").toString
+    spark.range(0).select(col("id").as("doc_id"), lit("").as("text"),
+        lit("en").as("lang"), lit("t").as("source"), lit(0L).as("n_chars"))
+      .write.parquet(s"$dir/documents.parquet")
+    val (base, v, tf) = currentGrain(dir)
+    assert(TextOps.corpusStatsAt(spark, base, v).collect().head.getLong(1) == 0L)
+    assert(TextOps.searchBm25(spark, dir, "a b").collect().isEmpty)
+    assert(TextOps.bm25RankQueries(tf, Some(TextOps.userQueryTerms(spark, "a b")),
+      10).collect().isEmpty)
+  }
+
+  test("searchBm25: a warm search runs ≤ 3 jobs and scans only its terms' grain buckets") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val (base, v, tf) = currentGrain(sfDir)
+    val terms = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      .orderBy(col("df").desc, col("term")).limit(3).collect()
+      .map(_.getString(0)).toSeq
+    val q = terms.mkString(" ")
+    TextOps.searchBm25(spark, sfDir, q).collect() // warm: memoized stats
+    val (rows, jobs) = jobsOf(TextOps.searchBm25(spark, sfDir, q).collect())
+    assert(rows.nonEmpty, "fixture vacuous — no ranked rows")
+    assert(jobs >= 1 && jobs <= 3, s"a warm search ran $jobs jobs")
+    val grain = TextOps.tfGrainArtifact(base, v)
+    val selected = TextOps.searchBm25(spark, sfDir, q).queryExecution.sparkPlan
+      .collect { case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(grain)) =>
+        s.metadata.get("SelectedBucketsCount") }
+    val buckets = terms.toDF("t")
+      .select(pmod(hash(col("t")), lit(graft.queries.Dedup.IndexBuckets)))
+      .distinct().count()
+    assert(selected.size == 1, s"grain scans: $selected")
+    selected.head match {
+      case Some(s) =>
+        val n = s.takeWhile(_.isDigit).toInt
+        assert(n <= buckets, s"grain scan selects $s for $buckets term buckets")
+      case None => fail("the grain scan prunes no buckets")
+    }
+  }
+
 
   test("tf-grain chain composes past depth two: v3 = append of an append, still exact") {
     import graft.sources.Versioned
