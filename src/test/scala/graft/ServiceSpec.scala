@@ -2,12 +2,16 @@ package graft
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 import graft.service.{First100Set, First100Relational, RestApi}
 
 /** First100 service semantics (FIXTURES.md §5) + REST route behavior
   * (reference readme.md:180-196), driven over real HTTP. */
 class ServiceSpec extends AnyFunSuite {
+
+  private val mapper = new ObjectMapper()
 
   test("exhaustive: ∀n∈[1,100], extract(n) ⇒ missingBySum == n") {
     (1 to 100).foreach { n =>
@@ -84,6 +88,28 @@ class ServiceSpec extends AnyFunSuite {
       // job route without a spark session → 503; status starts idle
       assert(http("POST", s"$base/etl/run", Some("""{"csvPath":"x"}"""))._1 == 503)
       assert(http("GET", s"$base/etl/status")._2 == """{"state":"idle"}""")
+    } finally api.stop()
+  }
+
+  test("/extract decodes its body as JSON: a fraction or a non-JSON body is a 422") {
+    val api = new RestApi(None, 0).start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      // pydantic's int rejects a fraction; a regex read took the 5
+      for (bad <- Seq("""{"number": 5.7}""", """"number": 5""",
+          """{"number": 5""", """{"number": 5} trailing""",
+          """{"number": "5"}""", """[5]""")) {
+        val (c, b) = http("POST", s"$base/extract", Some(bad))
+        assert(c == 422, s"$bad → $c $b")
+        assert(mapper.readTree(b).get("detail").isTextual, b)
+      }
+      // nothing was extracted by any of them
+      assert(http("GET", s"$base/missing")._1 == 400)
+      // a nested field of the same name is not the top-level field
+      assert(http("POST", s"$base/extract",
+        Some("""{"nested": {"number": 9}, "number": 5}""")) ==
+        ((200, """{"extracted":5}""")))
+      assert(http("GET", s"$base/missing") == ((200, """{"missing":5}""")))
     } finally api.stop()
   }
 
@@ -172,6 +198,73 @@ class ServiceSpec extends AnyFunSuite {
       while (http("GET", s"$base/etl/status")._2.contains("running")
           && System.nanoTime() < deadline) Thread.sleep(50)
       assert(http("GET", s"$base/etl/status")._2.contains("failed"))
+    } finally api.stop()
+  }
+
+  test("/etl/run with \"async\" as a string stays synchronous") {
+    val api = new RestApi(Some(SparkSpec.spark), 0).start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      val (code, body) = http("POST", s"$base/etl/run",
+        Some("""{"csvPath":"/nope/missing.csv","async":"true"}"""))
+      assert(code == 500 && mapper.readTree(body).get("state").asText == "failed",
+        s"$code $body")
+    } finally api.stop()
+  }
+
+  test("/etl/run on a generated CSV: sync counts equal the library's, async polls to done") {
+    val spark = SparkSpec.spark
+    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-svc")
+    val csv = tmp.resolve("charges.csv")
+    // clean rows plus one row per critical reason (id, company_id,
+    // amount, created_at, status) in ChargesEtl.rawSchema's columns
+    val rows = Seq(
+      "c01,Acme,co1,10.50,paid,2019-03-16,2019-03-17",
+      "c02,,co1,4.25,paid,2019-03-16,",
+      "c03,Globex,co2,7.00,voided,2019-03-17,2019-03-18",
+      "c04,Globex,co2,1.10,pending,2019-03-17,",
+      ",Acme,co1,3.00,paid,2019-03-16,",
+      "c06,Acme,,3.00,paid,2019-03-16,",
+      "c07,Acme,co1,abc,paid,2019-03-16,",
+      "c08,Acme,co1,2.00,paid,2019/03/16,",
+      "c09,Globex,co2,2.00,,2019-03-17,")
+    java.nio.file.Files.write(csv,
+      (graft.etl.ChargesEtl.rawSchema.fieldNames.mkString(",") +: rows)
+        .mkString("\n").getBytes(UTF_8))
+    val api = new RestApi(Some(spark), 0).start()
+    try {
+      val base = s"http://localhost:${api.boundPort}"
+      val (code, body) = http("POST", s"$base/etl/run",
+        Some(s"""{"csvPath":"$csv"}"""))
+      assert(code == 200, body)
+      val res = graft.etl.ChargesEtl.run(spark, csv.toString)
+      val expect = Seq("original" -> res.original.count(),
+        "clean" -> res.clean.count(), "critical" -> res.critical.count())
+      assert(expect.map(_._2) == Seq(9L, 4L, 5L), expect)
+      val got = mapper.readTree(body)
+      assert(got.get("state").asText == "done", body)
+      expect.foreach { case (k, n) => assert(got.get(k).asLong == n, s"$k: $body") }
+      assert(http("GET", s"$base/etl/status") == ((200, body)))
+      val (qc, qb) = http("GET",
+        s"$base/query/daily_totals?from=2019-03-16&to=2019-03-17")
+      // c02's blank name fills from co1's first name; amounts stay
+      // plain decimals with their scale
+      assert(qc == 200 && qb == "[" +
+        """{"company_name":"Acme","transaction_date":"2019-03-16","total_amount":14.75},""" +
+        """{"company_name":"Globex","transaction_date":"2019-03-17","total_amount":8.10}]""",
+        qb)
+
+      val (ac, ab) = http("POST", s"$base/etl/run",
+        Some(s"""{"csvPath":"$csv","async":true}"""))
+      assert(ac == 202 && ab == """{"state":"running"}""", s"$ac $ab")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      var st = ab
+      while (st.contains("\"running\"") && System.nanoTime() < deadline) {
+        Thread.sleep(50)
+        st = http("GET", s"$base/etl/status")._2
+      }
+      assert(st == body, "the async run must finish with the sync run's counts")
+      res.release()
     } finally api.stop()
   }
 
@@ -300,20 +393,47 @@ class ServiceSpec extends AnyFunSuite {
   }
 
   test("/docs serves an OpenAPI document listing every route (R5)") {
-    val api = new RestApi(None, 0).start()
-    try {
-      val base = s"http://localhost:${api.boundPort}"
-      val (code, body) = http("GET", s"$base/docs")
-      assert(code == 200)
-      assert(body.contains("\"openapi\""))
-      Seq("/extract", "/missing", "/reset", "/health", "/etl/run",
-        "/etl/status", "/query/daily_totals", "/query/run",
-        "/index/maintain", "/search", "/knn", "/quality", "/tokenize",
-        "/pack/stats", "/lake/status", "/lake/compact",
-        "/lake/compact/status", "/lake/point", "/lake/remove",
-        "/lake/history", "/docs")
-        .foreach(route => assert(body.contains("\"" + route + "\""), route))
-    } finally api.stop()
+    // both sides of the 503 guard: without a session every Spark-backed
+    // route answers 503 first; with one, its own 405/422 answers
+    for (session <- Seq(None, Some(SparkSpec.spark))) {
+      val api = new RestApi(session, 0).start()
+      try {
+        val base = s"http://localhost:${api.boundPort}"
+        val (code, body) = http("GET", s"$base/docs")
+        assert(code == 200)
+        val doc = mapper.readTree(body)
+        assert(doc.has("openapi"))
+        val paths = doc.get("paths")
+        // the documented paths ARE the registered routes, in both
+        // directions: a route without docs or docs without a route fails
+        assert(api.routes.map(_.path).toSet == paths.fieldNames().asScala.toSet)
+        api.routes.foreach { rt =>
+          val ops = paths.get(rt.path)
+          rt.method.foreach(m =>
+            assert(ops.has(m.toLowerCase), s"${rt.path}: $m undocumented"))
+          assert(ops.elements().asScala.forall(_.get("responses").has("503"))
+            == rt.needsSpark, s"${rt.path}: 503 documented iff it needs Spark")
+          // every body parses as JSON; every error body has a string detail
+          def checked(method: String): Int = {
+            val (c, b) = http(method, base + rt.path,
+              if (method == "POST") Some("{}") else None)
+            val tree = mapper.readTree(b)
+            if (c / 100 != 2)
+              assert(Option(tree.get("detail")).exists(_.isTextual),
+                s"$method ${rt.path} → $c: $b")
+            c
+          }
+          rt.method.foreach { m =>
+            val wrong = if (m == "GET") "POST" else "GET"
+            assert(checked(wrong) ==
+              (if (rt.needsSpark && session.isEmpty) 503 else 405), rt.path)
+          }
+          // no query params and an empty object body: a missing-parameter
+          // request for every route that takes parameters
+          checked(rt.method.getOrElse("GET"))
+        }
+      } finally api.stop()
+    }
   }
 
   test("/knn serves index-backed ANN over HTTP; contract = the library seam") {
@@ -567,6 +687,42 @@ class ServiceSpec extends AnyFunSuite {
       assert(model2 != m1, "corpus replacement must bump the model address")
       assert(!b2.contains("\"ab\""),
         s"the old corpus's (a,b) merge leaked into the new model: $b2")
+    } finally api.stop()
+  }
+
+  test("/tokenize decodes JSON escapes: the served text is the client's text") {
+    val spark = SparkSpec.spark
+    val api = new RestApi(Some(spark), 0).start()
+    try {
+      import org.apache.spark.sql.functions._
+      import graft.queries.TextOps
+      val base = s"http://localhost:${api.boundPort}"
+      val tmp = java.nio.file.Files.createTempDirectory("graft-tok-esc").toString
+      spark.range(0, 200).select(col("id").as("doc_id"),
+        lit("say hi say hi").as("text"), lit("en").as("lang"),
+        lit("synthetic").as("source"), lit(13L).as("n_chars"))
+        .write.parquet(s"$tmp/documents.parquet")
+      // the body spells the text with JSON escapes: an escaped quote, a
+      // backslash, a newline, \u00e9 and the surrogate pair of U+1F600
+      val smile = new String(Character.toChars(0x1F600))
+      val text = "say \"hi\" C:\\tmp\ncafé " + smile + "x"
+      val req = "{\"text\":\"say \\\"hi\\\" C:\\\\tmp\\ncaf\\u00e9 " +
+        "\\ud83d\\ude00x\",\"dir\":" + mapper.writeValueAsString(tmp) + "}"
+      assert(mapper.readTree(req).get("text").asText == text, req)
+      val (code, body) = http("POST", s"$base/tokenize", Some(req))
+      assert(code == 200, body)
+      // the existing render layout, with each string a JSON literal
+      def q(x: String) = mapper.writeValueAsString(x)
+      val (model, n, toks) = TextOps.tokenizeText(spark, tmp, text)
+      val tj = toks.map(t =>
+        s"""{"word":${q(t.word)},"subwords":[${
+          t.subwords.map(q).mkString(",")}],""" +
+          s""""ids":[${t.ids.mkString(",")}]}""").mkString("[", ",", "]")
+      assert(body == s"""{"model":${q(model)},"merges":$n,"tokens":$tj}""", body)
+      val words = mapper.readTree(body).get("tokens").elements().asScala
+        .map(_.get("word").asText).toSeq
+      assert(words == Seq("say", "\"hi\"", "C:\\tmp", "café", smile + "x"),
+        words)
     } finally api.stop()
   }
 
