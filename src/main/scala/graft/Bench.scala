@@ -3,6 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.node.NullNode
+import com.fasterxml.jackson.databind.util.RawValue
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry (driver contract): runs every SparkEntry query against
@@ -95,16 +99,9 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (posture == "aqe") {
-      // the adaptive posture from birth (GraftSession's cluster config)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        (64 * 1024).toString) // see GraftSession.builder (r21)
-      spark.conf.set("spark.sql.files.maxPartitionBytes",
-        (128 * 1024 * 1024).toString)
-    }
+    // the adaptive posture from birth (GraftSession's cluster config)
+    if (posture == "aqe")
+      GraftSession.Adaptive.foreach { case (k, v) => spark.conf.set(k, v) }
     // warm the session (codegen compiler, parquet footer cache, JIT)
     // so per-query numbers measure the query, not startup
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -112,44 +109,18 @@ object Bench {
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
 
+    /** One timed invocation under [[Probe.cleaned]]: the seconds of
+      * construct + sink; cleanup runs after the clock stops. */
     def once(sess: SparkSession,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Either[String, Double] = {
-      // snapshot BEFORE the query so cleanup can target only RDDs this
-      // query registered — a deliberately long-lived cross-query cache
-      // (e.g. a shared signature index) must not be silently evicted
-      // between queries, which would re-charge its build to every user.
-      val preexisting: Set[Int] =
-        try {
-          if (!sess.sparkContext.isStopped)
-            sess.sparkContext.getPersistentRDDs.keySet.toSet
-          else Set.empty
-        } catch { case scala.util.control.NonFatal(_) => Set.empty }
+        : Either[String, Double] = Probe.cleaned(sess) {
       val t0 = System.nanoTime()
-      val r =
-        try {
-          val df = fn(sess, sfDir)
-          if (sink == "count") df.count()
-          else df.write.format("noop").mode("overwrite").save()
-          Right((System.nanoTime() - t0) / 1e9)
-        }
-        catch { case t: Throwable => Left(s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).take(200)}") }
-      // drop this query's localCheckpoint blocks before the next one:
-      // ~30 checkpointing queries × iters × 2 passes otherwise pile
-      // hundreds of persisted RDDs into the block manager, and the
-      // second (AQE) pass pays eviction churn concentrated in exactly
-      // the checkpoint-heavy dedup family (measured: +50% on the AQE
-      // total at sf0.1 before this cleanup). blocking=true so removal
-      // finishes inside this untimed gap; guarded so a query that
-      // killed the context cannot take the whole artifact with it —
-      // the per-query Left/-1 integrity contract outranks cleanup.
       try {
-        if (!sess.sparkContext.isStopped)
-          sess.sparkContext.getPersistentRDDs
-            .filterNot { case (id, _) => preexisting.contains(id) }
-            .values.foreach(_.unpersist(blocking = true))
-      } catch { case scala.util.control.NonFatal(_) => () }
-      r
+        val df = fn(sess, sfDir)
+        if (sink == "count") df.count() else Probe.noop(df)
+        Right((System.nanoTime() - t0) / 1e9)
+      }
+      catch { case t: Throwable => Left(s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).take(200)}") }
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -202,35 +173,23 @@ object Bench {
     val sfBase = Paths.get(sfDir).getFileName.toString
 
     /** Previous per-query medians from a mirror file (the one this run
-      * is about to overwrite). Only the flat `"queries"` object is
-      * parsed — this file is self-produced, so a regex is enough and
-      * keeps the dependency surface at zero. A mirror from a different
-      * scale factor (e.g. a dev run at sf0.01 before the driver's
-      * sf0.1 run) would produce a meaningless ratio; refuse to compare
-      * across sf. */
+      * is about to overwrite). A mirror from a different scale factor
+      * (e.g. a dev run at sf0.01 before an sf0.1 baseline run) would
+      * produce a meaningless ratio; refuse to compare across sf. */
     def loadPrev(prevPath: String): Option[Map[String, Double]] = {
       try {
         val p = Paths.get(prevPath)
         if (!Files.exists(p)) None
         else {
-          val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-          val prevSf = """"sf":"([^"]*)"""".r
-            .findFirstMatchIn(text).map(_.group(1))
+          val prev = graft.service.RestApi.json.readTree(p.toFile)
           // a mirror from a different timed action (legacy count vs
           // noop — r21) would produce a meaningless ratio too: count
           // pruned payload expressions noop computes. Absent field ⇒
           // legacy count line.
-          val prevSink = """"sink":"([^"]*)"""".r
-            .findFirstMatchIn(text).map(_.group(1)).getOrElse("count")
-          if (prevSf.exists(_ != sfDir) || prevSink != sink) None
-          else """"queries":\{([^}]*)\}""".r.findFirstMatchIn(text).map(_.group(1))
-            .map { qObj =>
-              // signed exponent: a prev value like 1.0E-5 must parse, not
-              // match as "1.0E" and throw (silently nulling the whole ratio)
-              """"([^"]+)":(-?[0-9.]+(?:[eE][-+]?[0-9]+)?)""".r
-                .findAllMatchIn(qObj)
-                .map(m => m.group(1) -> m.group(2).toDouble).toMap
-            }
+          val prevSink = Option(prev.get("sink")).map(_.asText).getOrElse("count")
+          if (Option(prev.get("sf")).exists(_.asText != sfDir) || prevSink != sink) None
+          else Option(prev.get("queries")).map(_.properties.asScala
+            .map(e => e.getKey -> e.getValue.asDouble).toMap)
         }
       } catch { case scala.util.control.NonFatal(_) => None }
     }
@@ -248,29 +207,34 @@ object Bench {
       * to tell apart. */
     def vsPrev(ratios: Seq[(String, Double)]): Option[Double] =
       if (ratios.isEmpty) None else Some(median(ratios.map(_._2)))
-    /** The worst 3 per-query ratios (VERDICT r11 #6): the headline
-      * median was flat in a round where one query moved 15% — the
-      * single-query spike must be visible in the tail-truncated round
-      * artifact without re-parsing the full `queries` object. */
-    def topRegressionsJson(ratios: Seq[(String, Double)]): String =
-      ratios.sortBy(-_._2).take(3)
-        .map { case (n, r) => s"""{"q":"${esc(n)}","ratio":${fmtRatio(r)}}""" }
-        .mkString("[", ",", "]")
     // pinned locale: under a comma-decimal default locale f"%.4f" renders
     // "2,9000", corrupting the JSON metric line
     def fmtRatio(r: Double): String =
       String.format(java.util.Locale.ROOT, "%.4f", Double.box(r))
+    def ratioJson(r: Double) = new RawValue(fmtRatio(r))
 
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => s"$c"
-      }
-    def runsJson(raw: Seq[(String, Seq[Double])]): String =
-      raw.map { case (k, vs) =>
-        "\"" + esc(k) + "\":" + vs.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
+    /** One pass's metric line. `top_regressions` holds the worst 3
+      * per-query ratios (VERDICT r11 #6): the headline median was flat
+      * in a round where one query moved 15% — the single-query spike
+      * must be visible in the tail-truncated round artifact without
+      * re-parsing the full `queries` object. */
+    def lineOf(metric: String, results: Seq[(String, Double)],
+        raw: Seq[(String, Seq[Double])], errors: collection.Map[String, String],
+        ratios: Seq[(String, Double)]): String =
+      graft.service.RestApi.json.writeValueAsString(Probe.obj(
+        "metric" -> metric,
+        // failures are excluded from the total (they contribute no time)
+        "value" -> results.collect { case (_, v) if v >= 0 => v }.sum,
+        "unit" -> "sec", "sink" -> sink,
+        "load_start" -> ratioJson(loadStart), "load_end" -> ratioJson(sysLoad()),
+        "cpu_probe_ms" -> ratioJson(cpuProbeMs),
+        "queries" -> Probe.obj(results: _*), "runs" -> Probe.obj(raw: _*),
+        "errors" -> Probe.obj(errors.toSeq: _*),
+        "vs_prev" -> vsPrev(ratios).map(ratioJson).getOrElse(NullNode.getInstance),
+        "vs_prev_n" -> ratios.length,
+        "top_regressions" -> ratios.sortBy(-_._2).take(3)
+          .map { case (n, r) => Probe.obj("q" -> n, "ratio" -> ratioJson(r)) },
+        "iters" -> iters, "sf" -> sfDir))
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isDefined) "bench_out.only.json" else "bench_out.json")
 
@@ -279,12 +243,6 @@ object Bench {
       * child. */
     def plainPass(): Unit = {
       val (results, rawRuns, errors) = runSuite(spark)
-      val qs = results.map { case (k, v) => "\"" + esc(k) + "\":" + v }
-        .mkString("{", ",", "}")
-      val errJson = errors.map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-        .mkString("{", ",", "}")
-      // failures are excluded from the headline total (they contribute no time)
-      val total = results.collect { case (_, v) if v >= 0 => v }.sum
       val histHead = s"bench_hist.$sfBase.json"
       // prev priority: explicit env > per-sf history > same-sf last mirror
       // (migration path for the first run after history files exist)
@@ -293,9 +251,7 @@ object Bench {
           loadPrev(histHead).orElse(
             loadPrev(if (only.isDefined) "bench_out.json" else out)))
       val headRatios = prevHead.map(ratiosVsPrev(_, results)).getOrElse(Seq.empty)
-      val vsPrevJson = vsPrev(headRatios).map(fmtRatio).getOrElse("null")
-      val line =
-        s"""{"metric":"total","value":$total,"unit":"sec","sink":"$sink","load_start":${fmtRatio(loadStart)},"load_end":${fmtRatio(sysLoad())},"cpu_probe_ms":${fmtRatio(cpuProbeMs)},"queries":$qs,"runs":${runsJson(rawRuns)},"errors":$errJson,"vs_prev":$vsPrevJson,"vs_prev_n":${headRatios.length},"top_regressions":${topRegressionsJson(headRatios)},"iters":$iters,"sf":"$sfDir"}"""
+      val line = lineOf("total", results, rawRuns, errors, headRatios)
       // aqePass's all-broken guard, mirrored (review finding, r20): a
       // plain pass where EVERY query errored is a broken harness, and
       // with ADVANCE set it would otherwise write a value-0/all-(-1)
@@ -360,12 +316,6 @@ object Bench {
       * locally and only the headline matters. */
     def aqePass(sess: SparkSession): Boolean = {
       val (aqeResults, aqeRaw, aqeErrors) = runSuite(sess)
-      val aqeQs = aqeResults.map { case (k, v) => "\"" + esc(k) + "\":" + v }
-        .mkString("{", ",", "}")
-      val aqeErrJson = aqeErrors
-        .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-        .mkString("{", ",", "}")
-      val aqeTotal = aqeResults.collect { case (_, v) if v >= 0 => v }.sum
       // vs_prev against the previous `.aqe` mirror (read before this run
       // overwrites it) so the adaptive posture — the configuration the
       // 100 TB story leans on — is regression-tracked too. Matters doubly
@@ -378,9 +328,7 @@ object Bench {
             loadPrev(if (only.isDefined) "bench_out.json.aqe" else out + ".aqe")))
       val aqeRatios =
         prevAqe.map(ratiosVsPrev(_, aqeResults)).getOrElse(Seq.empty)
-      val aqeVsPrev = vsPrev(aqeRatios).map(fmtRatio).getOrElse("null")
-      val aqeLine =
-        s"""{"metric":"total_aqe","value":$aqeTotal,"unit":"sec","sink":"$sink","load_start":${fmtRatio(loadStart)},"load_end":${fmtRatio(sysLoad())},"cpu_probe_ms":${fmtRatio(cpuProbeMs)},"queries":$aqeQs,"runs":${runsJson(aqeRaw)},"errors":$aqeErrJson,"vs_prev":$aqeVsPrev,"vs_prev_n":${aqeRatios.length},"top_regressions":${topRegressionsJson(aqeRatios)},"iters":$iters,"sf":"$sfDir"}"""
+      val aqeLine = lineOf("total_aqe", aqeResults, aqeRaw, aqeErrors, aqeRatios)
       // a pass where EVERY query errored is a broken harness (bad
       // child classpath, missing data dir), not a measurement — it
       // must not advance the mirror/history as a "successful" run
@@ -545,13 +493,7 @@ object Bench {
             .config("spark.ui.enabled", "false")
             .getOrCreate()
           aqe.sparkContext.setLogLevel("WARN")
-          aqe.conf.set("spark.sql.adaptive.enabled", "true")
-          aqe.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-          aqe.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-          aqe.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            (64 * 1024).toString) // see GraftSession.builder (r21)
-          aqe.conf.set("spark.sql.files.maxPartitionBytes",
-            (128 * 1024 * 1024).toString)
+          GraftSession.Adaptive.foreach { case (k, v) => aqe.conf.set(k, v) }
           // same warmup as a fresh JVM gets (the context is new)
           aqe.range(1000000).selectExpr("sum(id)").collect()
           SparkEntry.queries.headOption.foreach { case (_, fn) =>

@@ -95,27 +95,31 @@ object GraftSession {
       case other => sys.error(s"count parameter must be an int literal, got $other")
     }
 
+  /** The adaptive posture, one definition for the builder, Bench's AQE
+    * pass and the probe harness. */
+  val Adaptive: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    // AQE's partition coalescing is BYTES-based and CPU-blind: with
+    // the default 1 MB minPartitionSize, a CPU-dense small-bytes
+    // stage (text kernels, sketch merges, window sums over narrow
+    // rows) coalesces to 1-2 tasks and serializes — measured 10-15x
+    // on the low-core bench posture (q128 1.1 s -> 16 s at 8 cores,
+    // OPTIMIZATION_r21.md). 64 KB floors the coalesced size, which
+    // is invisible at cluster scale (target size is
+    // max(bytes/parallelism, minPartitionSize) — real inputs dwarf
+    // it) and only bites exactly where the default was pathological.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> (64 * 1024).toString,
+    "spark.sql.files.maxPartitionBytes" -> (128 * 1024 * 1024).toString)
+
   /** Tuned builder for local or cluster use. */
   def builder(cores: Int = Runtime.getRuntime.availableProcessors())
       : SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE's partition coalescing is BYTES-based and CPU-blind: with
-      // the default 1 MB minPartitionSize, a CPU-dense small-bytes
-      // stage (text kernels, sketch merges, window sums over narrow
-      // rows) coalesces to 1-2 tasks and serializes — measured 10-15x
-      // on the low-core bench posture (q128 1.1 s -> 16 s at 8 cores,
-      // OPTIMIZATION_r21.md). 64 KB floors the coalesced size, which
-      // is invisible at cluster scale (target size is
-      // max(bytes/parallelism, minPartitionSize) — real inputs dwarf
-      // it) and only bites exactly where the default was pathological.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        (64 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (128 * 1024 * 1024).toString)
+      .config(Adaptive.toMap)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")

@@ -740,9 +740,10 @@ object RestApi {
 
   private val NoSpark = "no spark session"
 
-  /** Request bodies are parsed and every hand-built body written here:
-    * a body is valid JSON by construction. */
-  private[service] val json = new ObjectMapper()
+  /** Request bodies are parsed and every hand-built body written here,
+    * as are the probe, Bench and Verify lines: valid JSON by
+    * construction. */
+  private[graft] val json = new ObjectMapper()
     .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   /** Validate an optional `limit` query param: absent → `default`,

@@ -578,31 +578,12 @@ class DedupSpec extends SparkSpec {
       .tableFiles(spark, base, "documents_delta", 2L)
       .map(f => dirBytes(f)).sum
     val budget = dirBytes(prevArt) + deltaBytes
-    val read = new java.util.concurrent.atomic.LongAdder
-    val seen = new java.util.concurrent.atomic.LongAdder
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        seen.increment()
-        val m = s.stageInfo.taskMetrics
-        if (m != null) read.add(m.inputMetrics.bytesRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try frame.write.format("noop").mode("overwrite").save()
-    finally {
-      var stable = 0; var last = -1L; var polls = 0
-      while (stable < 2 && polls < 50) {
-        Thread.sleep(100)
-        val now = seen.sum
-        if (now == last) stable += 1 else { stable = 0; last = now }
-        polls += 1
-      }
-      spark.sparkContext.removeSparkListener(l)
-    }
-    assert(read.sum > 0, "listener saw no input — measurement broken")
-    assert(read.sum <= budget * 3 / 2 + (1L << 20),
-      s"incremental maintenance read ${read.sum} bytes; " +
+    val read = graft.obs.Meter.measure(spark) {
+      frame.write.format("noop").mode("overwrite").save()
+    }._2.inputBytes
+    assert(read > 0, "listener saw no input — measurement broken")
+    assert(read <= budget * 3 / 2 + (1L << 20),
+      s"incremental maintenance read $read bytes; " +
         s"index+delta budget is $budget")
   }
 

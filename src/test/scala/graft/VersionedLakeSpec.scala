@@ -346,33 +346,14 @@ class VersionedLakeSpec extends SparkSpec {
     val b = docs.agg(min($"doc_id"), max($"doc_id")).head()
     val (lo, hi) = (b.getLong(0), b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 8)
 
-    // bytes-measured (the Scale-harness assertion): listener-summed
-    // parquet input of the same narrow range probe, before vs after
-    def probeBytes(): Long = {
-      val read = new java.util.concurrent.atomic.LongAdder
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = s.stageInfo.taskMetrics
-          if (m != null) read.add(m.inputMetrics.bytesRead)
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try Versioned.read(spark, base, "documents")
-        .filter($"doc_id".between(lo, hi))
-        .agg(sum(length($"text"))).collect()
-      finally {
-        var stable = 0; var last = -1L; var polls = 0
-        while (stable < 2 && polls < 50) {
-          Thread.sleep(100)
-          val now = read.sum
-          if (now == last) stable += 1 else { stable = 0; last = now }
-          polls += 1
-        }
-        spark.sparkContext.removeSparkListener(l)
-      }
-      read.sum
-    }
+    // bytes-measured (the probe-harness assertion): metered parquet
+    // input of the same narrow range probe, before vs after
+    def probeBytes(): Long =
+      graft.obs.Meter.measure(spark) {
+        Versioned.read(spark, base, "documents")
+          .filter($"doc_id".between(lo, hi))
+          .agg(sum(length($"text"))).collect()
+      }._2.inputBytes
     val fragmented = probeBytes()
 
     Versioned.compactPublish(spark, base, "documents", Seq("doc_id"), 4)
@@ -406,30 +387,13 @@ class VersionedLakeSpec extends SparkSpec {
     val docBytes = fs.getContentSummary(
       new Path(s"$base/_data/documents-00000001")).getLength
 
-    // listener-summed bytes written by the whole merge publish
-    val written = new java.util.concurrent.atomic.LongAdder
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        if (m != null) written.add(m.outputMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val v2 =
-      try Versioned.mergePublish(spark, base, "charges",
+    // metered bytes written by the whole merge publish
+    val (v2, usage) = graft.obs.Meter.measure(spark) {
+      Versioned.mergePublish(spark, base, "charges",
         spark.range(10, 15).selectExpr(
           "CAST(id AS STRING) AS id", "'c3' AS company_id"), Seq("id"))
-      finally {
-        var stable = 0; var last = -1L; var polls = 0
-        while (stable < 2 && polls < 50) {
-          Thread.sleep(100)
-          val now = written.sum
-          if (now == last) stable += 1 else { stable = 0; last = now }
-          polls += 1
-        }
-        spark.sparkContext.removeSparkListener(l)
-      }
+    }
+    val written = usage.outputBytes
     assert(v2 == 2L)
 
     // FILE IDENTITY: the untouched table at v2 is served by the SAME
@@ -438,8 +402,8 @@ class VersionedLakeSpec extends SparkSpec {
       "carried table must share v1's files, not a rewritten copy")
     // and the merge's total write volume is a fraction of the big
     // table's size — the publish wrote the merged table only
-    assert(written.sum < docBytes / 2,
-      s"merge wrote ${written.sum} bytes vs big table $docBytes — " +
+    assert(written < docBytes / 2,
+      s"merge wrote $written bytes vs big table $docBytes — " +
         "carry-forward is rewriting")
     // the merged table itself is fresh files with the upsert applied
     assert(Versioned.tableFiles(spark, base, "charges", 2L)
