@@ -1,25 +1,22 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
-/** Table layout for the 100 TB posture (SURVEY §4.2 partition pruning,
-  * §7.3 step 8).
+/** The staging-then-swap protocol behind whole-directory rewrites
+  * (SURVEY S5): the reference commits its loads in one MySQL
+  * transaction; here a table directory is replaced by writing a
+  * staging dir beside it and promoting that with a rename-aside swap.
   *
-  * Facts are laid out date-partitioned (`part_date=YYYY-MM-DD/` dirs):
-  * a date-ranged query then reads only matching directories — the scan
-  * shows `PartitionFilters` and I/O scales with the date range, not
-  * the table. Within partitions, files stay near the 128 MB scan
-  * target via a pre-write `repartition` on the partition column (one
-  * shuffle, no small-files problem).
-  *
-  * Bucketing (`bucketBy` on the join key) is the companion layout for
-  * co-located fact⋈fact joins — it needs a catalog (`saveAsTable`), so
-  * it ships as an opt-in here and is exercised in LakeSpec.
+  * [[promoteStaging]] is the one copy of the move-aside / promote /
+  * restore sequence — [[Sinks]] swaps whole tables and bucket
+  * partitions through it, [[graft.streaming.LedgerCompaction]] swaps
+  * the compacted ledger partition. [[recoverSwap]] and [[recoverAll]]
+  * heal a `.staging`/`.swapbackup` pair a crash left behind. Versioned
+  * tables need none of this: [[Versioned]] publishes by manifest.
   */
 object Lake {
-
-  import org.apache.hadoop.fs.{FileSystem, Path}
 
   private[graft] def stagingPath(dst: Path) =
     new Path(dst.getParent, dst.getName + ".staging")
@@ -30,22 +27,28 @@ object Lake {
     * rename dst→backup, staging→dst, delete backup. Unlike
     * delete-then-rename there is never a moment with ZERO copies at
     * rest — a crash at any step leaves old or new data intact on disk
-    * and [[recoverSwap]] restores a readable table. The reader-visible
-    * gap shrinks from an O(files) recursive delete to two filesystem
-    * metadata renames.
+    * and the caller's recovery restores a readable table. The
+    * reader-visible gap shrinks from an O(files) recursive delete to
+    * two filesystem metadata renames. If the promote rename fails —
+    * returns false or throws — the old table is renamed back before
+    * the error propagates, so readers keep the old table.
     *
-    * Precondition: `staging` was committed by Spark (has `_SUCCESS`) —
-    * recovery uses that marker to tell a mid-swap crash from a
-    * mid-write crash. */
+    * `backup` is the caller's: [[backupPath]] for [[recoverSwap]]'s
+    * naming, an underscore name where a `.swapbackup` sibling would be
+    * read as a partition. Precondition: `staging` was committed by
+    * Spark (has `_SUCCESS`) — recovery uses that marker to tell a
+    * mid-swap crash from a mid-write crash. */
   private[graft] def promoteStaging(fs: FileSystem, staging: Path,
-      dst: Path): Unit = {
-    val backup = backupPath(dst)
+      dst: Path, backup: Path): Unit = {
     fs.delete(backup, true) // stale backup from an earlier completed swap
     if (fs.exists(dst) && !fs.rename(dst, backup))
       sys.error(s"swap: could not move $dst aside to $backup")
-    if (!fs.rename(staging, dst)) {
-      // restore old data before failing — readers keep the old table
-      if (fs.exists(backup)) fs.rename(backup, dst)
+    def restore(): Unit = if (fs.exists(backup)) fs.rename(backup, dst)
+    val promoted =
+      try fs.rename(staging, dst)
+      catch { case NonFatal(e) => restore(); throw e }
+    if (!promoted) {
+      restore()
       sys.error(s"swap: could not promote $staging to $dst")
     }
     fs.delete(backup, true)
@@ -101,216 +104,4 @@ object Lake {
       .map(n => new Path(base, n).toString)
       .filter(p => recoverSwap(spark, p))
   }
-
-  /** Write `df` date-partitioned by `tsCol`'s date. zstd: the right
-    * storage/scan-cpu tradeoff for cold analytical data at scale. */
-  def writeDatePartitioned(df: DataFrame, tsCol: String, path: String): Unit =
-    df.withColumn("part_date", to_date(col(tsCol)))
-      .repartition(col("part_date")) // 1 writer set per partition dir
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .partitionBy("part_date")
-      .parquet(path)
-
-  /** Read back; date predicates on `part_date` prune directories. */
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Small-files compaction: rewrite a parquet dir into files near the
-    * 128 MB scan target. Streaming appends and partitioned writes both
-    * accrete small files; compaction restores scan efficiency (fewer
-    * tasks, fuller columnar pages). Staging + atomic rename so readers
-    * never see a half-compacted table.
-    *
-    * Hive-partitioned layouts (`col=value/` dirs — the date-
-    * partitioned facts and the scoped-upsert tables, whose touched
-    * buckets accrete files per batch) are DETECTED and preserved: the
-    * rewrite re-partitions by the same columns, one writer set per
-    * partition dir. Without this the compacted table silently lost
-    * its directory pruning (the partition column survived as data,
-    * the layout didn't). */
-  def compact(spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    recoverSwap(spark, path) // self-heal a crashed earlier swap first
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // walk one directory chain collecting `col=` partition names
-    @annotation.tailrec
-    def partCols(p: org.apache.hadoop.fs.Path,
-        acc: List[String]): List[String] = {
-      val sub = fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath).find(_.getName.contains("="))
-      sub match {
-        case Some(d) => partCols(d, acc :+ d.getName.split("=")(0))
-        case None => acc
-      }
-    }
-    val parts = partCols(dst, Nil)
-    val df = spark.read.parquet(path)
-    val staging = stagingPath(dst)
-    val writer =
-      if (parts.nonEmpty)
-        // one writer set per partition dir; file count within a dir
-        // collapses to the task's output (the small-files fix)
-        df.repartition(parts.map(col): _*)
-          .write.partitionBy(parts: _*)
-      else {
-        val bytes = fs.getContentSummary(dst).getLength
-        val nFiles = math.max(1, (bytes / targetFileBytes).toInt)
-        df.repartition(nFiles).write
-      }
-    writer.mode(SaveMode.Overwrite)
-      .option("compression", "zstd").parquet(staging.toString)
-    promoteStaging(fs, staging, dst)
-  }
-
-  /** Bit-spread a 16-bit value so its bits occupy even positions —
-    * the standard Morton-code expansion (public: Morton 1966; the
-    * technique behind Delta/Iceberg OPTIMIZE ZORDER), done entirely
-    * with builtin codegen'd integer ops. */
-  private def spreadBits16(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    val x0 = c.bitwiseAND(lit(0xffff))
-    val x1 = (x0.bitwiseOR(shiftleft(x0, 8))).bitwiseAND(lit(0x00ff00ff))
-    val x2 = (x1.bitwiseOR(shiftleft(x1, 4))).bitwiseAND(lit(0x0f0f0f0f))
-    val x3 = (x2.bitwiseOR(shiftleft(x2, 2))).bitwiseAND(lit(0x33333333))
-    (x3.bitwiseOR(shiftleft(x3, 1))).bitwiseAND(lit(0x55555555))
-  }
-
-  /** Z-order clustered write: rows are laid out along a Morton curve
-    * over TWO numeric columns, so every output file covers a tight
-    * rectangle in (a, b) space and parquet min/max stats prune row
-    * groups for predicates on EITHER column — the multi-dimension
-    * answer where `partitionBy`/sorting helps only one dimension.
-    *
-    * Columns are linearly quantized to 16 bits against their min/max
-    * (one tiny stats job — the same pass a layout optimizer runs);
-    * nulls sort first via a sentinel bucket. Right for roughly-uniform
-    * keys; for skewed keys use [[writeZOrderedEquiDepth]] — linear
-    * quantization maps a heavy-tailed column almost entirely into a
-    * handful of cells and the curve stops separating rows. */
-  def writeZOrdered(spark: SparkSession, df: DataFrame, path: String,
-      colA: String, colB: String, nFiles: Int = 32): Unit = {
-    val s = df.agg(
-      min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).head()
-    // An all-null column (or an empty frame) makes min/max return null:
-    // no range exists, so that dimension degenerates to a single cell
-    // (all rows → cell 0) — same posture as the equi-depth variant,
-    // instead of an opaque NPE on Row.getDouble.
-    def quant(c: String, loIdx: Int, hiIdx: Int) =
-      if (s.isNullAt(loIdx) || s.isNullAt(hiIdx)) lit(0)
-      else {
-        val (lo, hi) = (s.getDouble(loIdx), s.getDouble(hiIdx))
-        val span = if (hi > lo) hi - lo else 1.0
-        val q = ((col(c).cast("double") - lit(lo)) * lit(65535.0) / lit(span))
-          .cast("int")
-        when(col(c).isNull, lit(0))
-          .otherwise(least(greatest(q, lit(0)), lit(65535)))
-      }
-    zWrite(df, quant(colA, 0, 1), quant(colB, 2, 3), path, nFiles)
-  }
-
-  /** Z-order clustered write with EQUI-DEPTH (rank-based) quantization:
-    * cell boundaries are the columns' approximate quantiles, so every
-    * cell holds ~the same number of ROWS regardless of the value
-    * distribution. On a skewed column (zipfian ids, heavy-tailed
-    * amounts) linear min/max quantization collapses — one outlier
-    * stretches the range so the bulk of the data lands in a few cells
-    * and file-level min/max stats stop pruning. Quantile cells keep
-    * the curve informative: this is the skew-resistant variant the
-    * layout optimizers of Delta/Iceberg implement via sampling.
-    *
-    * One `approx_percentile` stats pass (bounded: 2·(cells−1) split
-    * points on the driver), then the same single-shuffle clustered
-    * write as [[writeZOrdered]]. `bits` per dimension defaults to 8
-    * (256 cells) — far finer than any realistic file count, and the
-    * per-row cell lookup is an O(cells) codegen'd array aggregate. */
-  def writeZOrderedEquiDepth(spark: SparkSession, df: DataFrame,
-      path: String, colA: String, colB: String, nFiles: Int = 32,
-      bits: Int = 8): Unit = {
-    require(bits >= 1 && bits <= 16, s"bits must be in [1,16]: $bits")
-    val cells = 1 << bits
-    val fracs = lit((1 until cells).map(_.toDouble / cells).toArray)
-    val s = df.agg(
-      percentile_approx(col(colA).cast("double"), fracs, lit(10000)),
-      percentile_approx(col(colB).cast("double"), fracs, lit(10000))).head()
-    // An all-null column (or an empty frame) makes percentile_approx
-    // return null: no quantiles exist, so that dimension degenerates
-    // to a single cell (all rows → cell 0) — same null-sentinel
-    // posture as the linear variant, instead of an opaque NPE.
-    def splitsAt(i: Int): Seq[Double] =
-      if (s.isNullAt(i)) Seq.empty else s.getSeq[Double](i)
-    def quant(c: String, splits: Seq[Double]) =
-      if (splits.isEmpty) lit(0)
-      else {
-        // cell id = number of split points ≤ value (monotone rank);
-        // literal array + aggregate stays inside whole-stage codegen
-        val q = aggregate(
-          lit(splits.toArray), lit(0),
-          (acc, b) => acc + when(col(c).cast("double") >= b, 1).otherwise(0))
-        when(col(c).isNull, lit(0)).otherwise(q)
-      }
-    zWrite(df, quant(colA, splitsAt(0)), quant(colB, splitsAt(1)),
-      path, nFiles)
-  }
-
-  /** Shared tail of the z-ordered writers: interleave the two
-    * quantized cell ids into a Morton code, range-partition + sort on
-    * it (one shuffle), write. */
-  private def zWrite(df: DataFrame, qa: org.apache.spark.sql.Column,
-      qb: org.apache.spark.sql.Column, path: String, nFiles: Int): Unit = {
-    val z = shiftleft(spreadBits16(qa).cast("long"), 1)
-      .bitwiseOR(spreadBits16(qb).cast("long"))
-    df.withColumn("_z", z)
-      .repartitionByRange(nFiles, col("_z")) // file ≈ one curve segment
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .parquet(path)
-  }
-
-  /** Read a parquet table whose files span SCHEMA VERSIONS (columns
-    * added over time): `mergeSchema` unions the per-file schemas and
-    * old files surface the new columns as null; `defaults` then fills
-    * chosen columns (`coalesce`) so downstream code sees one stable
-    * schema. Scale caveat — mergeSchema reads EVERY file footer (a
-    * distributed job, but still a full file-listing sweep per query):
-    * fine for occasional reads; for a hot 100 TB path use
-    * [[readEvolvedAs]] with the current schema instead. */
-  def readEvolved(spark: SparkSession, path: String,
-      defaults: Map[String, Any] = Map.empty): DataFrame =
-    applyDefaults(
-      spark.read.option("mergeSchema", "true").parquet(path), defaults)
-
-  /** Null-fill chosen columns with their evolution defaults — the
-    * shared tail of both evolution reads (one definition so the
-    * contains-guard and lit coercion can't drift apart). */
-  private def applyDefaults(df: DataFrame,
-      defaults: Map[String, Any]): DataFrame =
-    defaults.foldLeft(df) { case (d, (c, v)) =>
-      if (d.columns.contains(c)) d.withColumn(c, coalesce(col(c), lit(v)))
-      else d
-    }
-
-  /** The no-footer-sweep evolution read: project every file onto an
-    * EXPLICIT target schema (parquet fills columns a file lacks with
-    * null — per-file schema reconciliation is by name). This is the
-    * production path: the catalog owns the current schema, readers
-    * never pay a footer sweep, and a file from ANY older version
-    * remains readable. */
-  def readEvolvedAs(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType,
-      defaults: Map[String, Any] = Map.empty): DataFrame =
-    applyDefaults(spark.read.schema(schema).parquet(path), defaults)
-
-  /** Bucketed catalog table for shuffle-free equi-joins on `keyCol`:
-    * two tables bucketed the same way join with zero exchange. */
-  def writeBucketed(df: DataFrame, keyCol: String, buckets: Int,
-      table: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, keyCol)
-      .sortBy(keyCol)
-      .saveAsTable(table)
 }

@@ -63,7 +63,7 @@ object Sinks {
     val staging = Lake.stagingPath(dst)
     merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Lake.promoteStaging(fs, staging, dst)
+    Lake.promoteStaging(fs, staging, dst, Lake.backupPath(dst))
   }
 
   /** S4 at scale: bucket-scoped upsert. [[upsertParquet]] rewrites the
@@ -182,7 +182,8 @@ object Sinks {
           sys.error(s"scopedUpsert: could not stage $staged")
         fs.create(new org.apache.hadoop.fs.Path(partStaging, "_SUCCESS"))
           .close()
-        Lake.promoteStaging(fs, partStaging, partDir)
+        Lake.promoteStaging(fs, partStaging, partDir,
+          Lake.backupPath(partDir))
       }
     }
     fs.delete(stagingRoot, true)

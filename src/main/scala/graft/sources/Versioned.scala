@@ -104,8 +104,8 @@ object Versioned {
     extends RuntimeException(msg)
 
   /** One table in a publish: the frame plus its physical layout.
-    * `partitionBy` gives facts the date-partitioned layout
-    * ([[Lake.writeDatePartitioned]] semantics) inside the version.
+    * `partitionBy` gives facts a Hive-partitioned layout inside the
+    * version (`part_date=YYYY-MM-DD/` dirs prune date predicates).
     * `statsCols` declares zone-map columns: the publish distills the
     * written files' parquet footer min/max into a [[ZoneMaps]] sidecar
     * inside the data dir, enabling manifest-level file skipping via

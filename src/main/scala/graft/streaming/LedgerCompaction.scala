@@ -4,25 +4,29 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sources.Lake
 
-/** Crash-safe compaction for SUM-SEMANTICS batch ledgers — the shared
-  * engine behind [[StreamingCms.compactLedger]] and
-  * [[StreamingKmv.compactLedger]].
+/** Crash-safe compaction for batch ledgers — the shared engine
+  * behind every streaming job's `compactLedger`: the sum-semantics
+  * ledgers ([[StreamingCms]], [[StreamingKmv]], [[StreamingTfGrain]],
+  * [[StreamingLmScores]], [[StreamingDsir]]) and the set-semantics
+  * chunk ledger of [[StreamingChunkDedup]].
   *
-  * [[StreamingChunkDedup.compactLedger]] pioneered the checked
-  * backup-swap, but its recovery contract is idempotent-merge-shaped:
-  * after a crash, "at worst duplicate hashes remain", harmless for an
-  * anti-join probe. A Count-Min matrix or an `n_docs` counter has no
-  * such grace — a crash that leaves a batch's rows BOTH folded into
-  * the compacted partition AND still on disk as a source dir would
-  * DOUBLE-COUNT in every subsequent sum. So this engine adds the
-  * missing piece: the compacted partition carries a `_folded` manifest
-  * (an underscore file — invisible to partition discovery and parquet
-  * reads) naming the batch ids it absorbed, written into the staging
-  * dir BEFORE the swap. The promote rename is the commit: once the new
-  * compacted partition is live, its manifest proves which source dirs
-  * are duplicates, and [[heal]] — run at every compaction AND every
-  * read — deletes them. Crash anywhere and the ledger stays exact:
+  * A ledger is a parquet dir partitioned by `graft_batch_id`, one
+  * partition per micro-batch; compaction folds old partitions into
+  * one reserved partition so partition discovery stays bounded. The
+  * swap is [[graft.sources.Lake.promoteStaging]]'s; what this engine
+  * adds is exactness after a crash. A Count-Min matrix or an `n_docs`
+  * counter has no grace for a batch whose rows are BOTH folded into
+  * the compacted partition AND still on disk as a source dir — every
+  * subsequent sum would DOUBLE-COUNT it. So the compacted partition
+  * carries a `_folded` manifest (an underscore file — invisible to
+  * partition discovery and parquet reads) naming the batch ids it
+  * absorbed, written into the staging dir BEFORE the swap. The promote
+  * rename is the commit: once the new compacted partition is live,
+  * its manifest proves which source dirs are duplicates, and [[heal]]
+  * — run at every compaction AND every read — deletes them. Crash
+  * anywhere and the ledger stays exact:
   *
   *  - before promote: the old compacted partition (whose manifest's
   *    dirs were already deleted) still serves reads; staging is
@@ -35,12 +39,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Run compaction between triggers, never concurrently with a batch
   * write or a reader — mid-swap the compacted partition is briefly
-  * absent from discovery (the [[StreamingChunkDedup]] caveat).
+  * absent from discovery.
   */
 object LedgerCompaction {
 
-  /** Reserved partition id for the compacted fold (underscore staging
-    * names keep `graft_batch_id=-1.x` shapes out of discovery). */
+  /** Reserved partition id for the compacted fold. Negative on
+    * purpose: no real batchId collides with it, and a batch's read of
+    * the ledger excluding its own partition always keeps it visible. */
   val CompactedBatch = -1L
 
   private val ManifestName = "_folded"
@@ -53,7 +58,7 @@ object LedgerCompaction {
 
   /** Restore a crashed swap and finish manifest-recorded source
     * deletions. Idempotent and cheap (one listing + one small file
-    * read); MUST run before any read of a sum-semantics ledger. */
+    * read); MUST run before any read of a ledger. */
   def heal(spark: SparkSession, ledgerDir: String): Unit = {
     val root = new Path(ledgerDir)
     val f = fs(spark, root)
@@ -92,9 +97,15 @@ object LedgerCompaction {
   /** Fold every batch partition except the newest `keepLast` (and the
     * compacted partition itself) into one partition whose rows are
     * `merge(sourceDirs)` — the caller supplies the algebra (elementwise
-    * sum, bottom-k merge, ...), this engine supplies the crash safety.
-    * `keepLast` must cover the stream's replay horizon, exactly as in
-    * [[StreamingChunkDedup.compactLedger]]. */
+    * sum, bottom-k merge, distinct union, ...), this engine supplies
+    * the crash safety.
+    *
+    * `keepLast` must cover the stream's replay horizon: replay only
+    * ever redelivers batches at the checkpoint frontier, and a batch
+    * folded while still inside it would have its own rows visible to
+    * its replay (a batch reads the ledger excluding only its own
+    * partition). The default of 2 in the callers covers
+    * AvailableNow/once-per-trigger streams. */
   def compact(spark: SparkSession, ledgerDir: String, keepLast: Int,
       merge: Seq[String] => DataFrame): Unit = {
     heal(spark, ledgerDir)
@@ -120,13 +131,9 @@ object LedgerCompaction {
     val out = f.create(new Path(staging, ManifestName), true)
     try out.write(foldable.mkString(",").getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    if (f.exists(tgt) && !f.rename(tgt, backup))
-      sys.error(s"ledger compact: could not move $tgt aside to $backup")
-    if (!f.rename(staging, tgt)) {
-      if (f.exists(backup)) f.rename(backup, tgt)
-      sys.error(s"ledger compact: could not promote $staging to $tgt")
-    }
-    f.delete(backup, true)
+    // the underscore backup, not Lake.backupPath: a
+    // `graft_batch_id=-1.swapbackup` sibling would be read as a partition
+    Lake.promoteStaging(f, staging, tgt, backup)
     foldable.foreach(b =>
       f.delete(new Path(root, s"graft_batch_id=$b"), true))
   }

@@ -38,9 +38,13 @@ object StreamingChunkDedup {
 
   /** Ledger hashes seen by batches OTHER than `excludeBatch` (see
     * class doc for why replay must not see its own prior attempt).
-    * Missing/empty ledger → empty frame. */
+    * Missing/empty ledger → empty frame. Heals first: a compaction
+    * that crashed mid-swap leaves the folded hashes in an underscore
+    * dir partition discovery hides, and reading past it would
+    * re-admit every chunk they record. */
   private[graft] def readLedger(spark: SparkSession, ledgerDir: String,
       excludeBatch: Long): DataFrame = {
+    LedgerCompaction.heal(spark, ledgerDir)
     val p = new Path(ledgerDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasOther = fs.exists(p) && fs.listStatus(p).exists { st =>
@@ -86,80 +90,16 @@ object StreamingChunkDedup {
   def readSink(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/clean").drop("graft_batch_id")
 
-  /** Reserved ledger partition holding compacted history. Negative on
-    * purpose: no real batchId collides with it, and `readLedger`'s
-    * exclusion (`=!= batchId`) always keeps it visible. */
-  private val CompactedBatch = -1L
-
-  /** Merge old per-batch ledger partitions into the reserved
-    * compacted partition. One dir per micro-batch is correct but
-    * accumulates forever — partition discovery over tens of
-    * thousands of dirs is its own scale problem. Compaction folds
-    * everything EXCEPT the newest `keepLast` batch partitions (and
-    * dedups hashes while at it).
-    *
-    * Safety: replay only ever redelivers batches at the stream's
-    * checkpoint frontier, so partitions older than `keepLast` batches
-    * can never be replayed — folding them into the compacted
-    * partition (which every batch's anti-join sees) preserves
-    * exactly-once. Folding a batch still inside the replay horizon
-    * WOULD break it (its chunks would become visible to its own
-    * replay); `keepLast` must cover the frontier, and the default of
-    * 2 does for AvailableNow/once-per-trigger streams. The fold
-    * itself is crash-safe: the source dirs stay on disk until the new
-    * compacted partition is live (a checked backup-swap, not
-    * delete-then-rename), so a crash at any step leaves every hash
-    * recoverable — the entry recovery below finishes an interrupted
-    * swap, and at worst duplicate hashes remain (harmless for an
-    * anti-join probe), never missing ones. Run between triggers, not
-    * concurrently with a batch write — mid-swap the compacted
-    * partition is briefly absent from discovery. */
+  /** Fold ledger partitions older than the newest `keepLast` batches
+    * into the reserved compacted partition, deduplicating hashes on
+    * the way: one dir per micro-batch is correct but accumulates
+    * forever, and partition discovery over tens of thousands of dirs
+    * is its own scale problem. Crash safety and the replay-horizon
+    * rule for `keepLast` are [[LedgerCompaction.compact]]'s. */
   def compactLedger(spark: SparkSession, outDir: String,
-      keepLast: Int = 2): Unit = {
-    val ledgerDir = s"$outDir/ledger"
-    val root = new Path(ledgerDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val target = new Path(root, s"graft_batch_id=$CompactedBatch")
-    // underscore names: partition discovery ignores them, where a
-    // `graft_batch_id=-1.swapbackup` dir (Lake's naming) would poison
-    // the ledger's partition-column inference
-    val staging = new Path(root, "_compact_staging")
-    val backup = new Path(root, "_compact_backup")
-    // recovery from a prior crash between the two swap renames: the
-    // backup IS the compacted partition (and the foldable sources it
-    // merged are still on disk — they are only deleted after promote)
-    if (!fs.exists(target) && fs.exists(backup) &&
-        !fs.rename(backup, target))
-      sys.error(s"compact: could not restore $backup to $target")
-    fs.delete(backup, true)  // stale from a completed prior swap
-    fs.delete(staging, true) // stale from a crashed prior write
-    val parts = fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("graft_batch_id="))
-      .map(st => st.getPath.getName.stripPrefix("graft_batch_id=").toLong)
-    val foldable = parts.filter(_ != CompactedBatch)
-      .sorted.dropRight(keepLast)
-    if (foldable.isEmpty) return
-    val srcDirs = (CompactedBatch +: foldable)
-      .map(b => new Path(root, s"graft_batch_id=$b"))
-      .filter(fs.exists(_)).map(_.toString)
-    val merged = spark.read.parquet(srcDirs: _*).select(col("h")).distinct()
-    merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // checked backup-swap (Lake.promoteStaging's discipline): staging
-    // holds old-compacted ∪ foldable, so whichever rename a crash
-    // interrupts, every hash still exists in target, backup+sources,
-    // or staging+sources — and recovery above restores discovery
-    if (fs.exists(target) && !fs.rename(target, backup))
-      sys.error(s"compact: could not move $target aside to $backup")
-    if (!fs.rename(staging, target)) {
-      if (fs.exists(backup)) fs.rename(backup, target)
-      sys.error(s"compact: could not promote $staging to $target")
-    }
-    fs.delete(backup, true)
-    foldable.foreach(b =>
-      fs.delete(new Path(root, s"graft_batch_id=$b"), true))
-  }
+      keepLast: Int = 2): Unit =
+    LedgerCompaction.compact(spark, s"$outDir/ledger", keepLast,
+      dirs => spark.read.parquet(dirs: _*).select(col("h")).distinct())
 
   /** Start the deduplicating ingest over a directory of parquet
     * document files. */

@@ -76,8 +76,8 @@ object StreamingCms {
     * CMS matrices IS a CMS matrix, the fold is value-invisible to
     * [[readSketch]]. Crash safety (including the double-count window
     * a sum cannot forgive) is [[LedgerCompaction]]'s manifest + heal
-    * discipline; `keepLast` must cover the replay horizon, as in
-    * [[StreamingChunkDedup.compactLedger]]. */
+    * discipline; `keepLast` must cover the replay horizon, as
+    * [[LedgerCompaction.compact]] states. */
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/sketch", keepLast,

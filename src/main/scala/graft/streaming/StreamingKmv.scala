@@ -80,7 +80,7 @@ object StreamingKmv {
     * for the minima by idempotence, for `n_docs` only because
     * [[LedgerCompaction]]'s manifest + heal discipline closes the
     * double-count window. `keepLast` must cover the replay horizon,
-    * as in [[StreamingChunkDedup.compactLedger]]. */
+    * as [[LedgerCompaction.compact]] states. */
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/sketch", keepLast,

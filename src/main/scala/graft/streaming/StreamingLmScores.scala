@@ -73,8 +73,8 @@ object StreamingLmScores {
     * into the reserved compacted partition — bounded directory
     * discovery over a long-running stream; the fold is a plain union,
     * value-invisible to [[readScores]] by construction. `keepLast`
-    * must cover the replay horizon, as in
-    * [[StreamingChunkDedup.compactLedger]]. */
+    * must cover the replay horizon, as
+    * [[LedgerCompaction.compact]] states. */
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/scores", keepLast,

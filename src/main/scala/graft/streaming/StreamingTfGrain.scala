@@ -71,7 +71,7 @@ object StreamingTfGrain {
     * value-invisible to [[readGrain]] only because
     * [[LedgerCompaction]]'s manifest + heal discipline closes the
     * duplicate-rows window. `keepLast` must cover the replay horizon,
-    * as in [[StreamingChunkDedup.compactLedger]]. */
+    * as [[LedgerCompaction.compact]] states. */
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/grain", keepLast,

@@ -475,4 +475,15 @@ class AnalyticsSpec extends SparkSpec {
     assert(!files.exists((f => f.contains("/documents/") || f.contains("_data/documents-"))),
       "incremental path re-scans the corpus")
   }
+
+  test("custom functions are SQL-registered") {
+    GraftSession.registerFunctions(spark)
+    val row = spark.sql(
+      """SELECT simhash64(array('a','b','c')) AS h,
+        |  dot_long(vector_quantize(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT))),
+        |           vector_quantize(array(CAST(2.0 AS FLOAT), CAST(0.5 AS FLOAT)))) AS d
+        |""".stripMargin).head()
+    assert(row.getLong(1) == 4L * 1000000000000L) // 1.5*2 + 2*0.5 = 4.0 at scale 12
+    assert(row.getLong(0) != 0L)
+  }
 }

@@ -1,73 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import graft.sources.Lake
 
-/** Scale-layout proofs: partition pruning and bucketed co-located
-  * joins must be visible in the physical plan, not just believed. */
+/** The staging-then-swap protocol: old or new data survives every
+  * step of a swap, and recovery leaves each table readable. */
 class LakeSpec extends SparkSpec {
-
-  test("date-partitioned layout prunes directories for date predicates") {
-    val dir = Files.createTempDirectory("graft-lake").toString + "/orders"
-    Lake.writeDatePartitioned(Tables(spark, sfDir, "orders"), "o_orderdate", dir)
-    val pruned = Lake.readPartitioned(spark, dir)
-      .filter(col("part_date") === "1995-03-15")
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), "scan must carry partition filters")
-    // pruning proof by I/O: one day's rows only
-    val oneDay = pruned.count()
-    val total = Lake.readPartitioned(spark, dir).count()
-    assert(oneDay > 0 && oneDay < total / 100,
-      s"one day ($oneDay) should be a sliver of $total")
-  }
-
-  test("bucketed tables join with no shuffle exchange") {
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    // a fresh derby metastore doesn't know about dirs a previous JVM
-    // left in the warehouse — clear the locations too
-    Seq("orders_b", "lineitem_b").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"spark-warehouse/$t")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
-    }
-    Lake.writeBucketed(Tables(spark, sfDir, "orders")
-      .select("o_orderkey", "o_totalprice"), "o_orderkey", 4, "orders_b")
-    Lake.writeBucketed(Tables(spark, sfDir, "lineitem")
-      .select("l_orderkey", "l_quantity"), "l_orderkey", 4, "lineitem_b")
-    // force the sort-merge path: at test scale everything broadcasts,
-    // which would hide the bucketing (at 100 TB neither side broadcasts)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("orders_b").join(spark.table("lineitem_b"),
-        col("o_orderkey") === col("l_orderkey"))
-        .groupBy("o_orderkey").agg(sum("l_quantity"))
-      joined.collect() // materialize so AQE finalizes the plan
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      // co-located: no Exchange anywhere (bucket layout feeds both the
-      // join and the same-key aggregate)
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$plan")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  test("compaction collapses small files and preserves every row") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
-    val df = Tables(spark, sfDir, "lineitem")
-    df.repartition(40).write.parquet(dir) // fragment: 40 small files
-    val before = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(before >= 30)
-    Lake.compact(spark, dir)
-    val after = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(after < 5, s"expected few files after compaction, got $after")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == df.count())
-    assert(back.exceptAll(df).count() == 0)
-  }
 
   test("swap keeps old-or-new data on disk at every step; crashes recover") {
     import org.apache.hadoop.fs.Path
@@ -121,33 +59,6 @@ class LakeSpec extends SparkSpec {
     assert(!fs.exists(staging) && !fs.exists(backup))
   }
 
-  test("compacting a partitioned table preserves its layout and pruning") {
-    val dir = Files.createTempDirectory("graft-compact2").toString + "/t"
-    val orders = Tables(spark, sfDir, "orders")
-      .withColumn("part_date", to_date(col("o_orderdate")))
-    // fragment: several files per partition dir
-    orders.repartition(6).write.partitionBy("part_date").parquet(dir)
-    def dirs() = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("part_date=")).map(_.getName).toSet
-    val before = dirs()
-    assert(before.nonEmpty)
-    val filesBefore = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("part_date="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    Lake.compact(spark, dir)
-    assert(dirs() == before, "partition dirs must survive compaction")
-    val filesAfter = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("part_date="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    assert(filesAfter < filesBefore,
-      s"compaction must reduce files: $filesBefore -> $filesAfter")
-    val back = Lake.readPartitioned(spark, dir)
-    assert(back.count() == orders.count())
-    val plan = back.filter(col("part_date") === "1995-03-15")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), "pruning must survive compaction")
-  }
-
   test("recoverAll heals every mid-swap table under a lake dir at startup") {
     import org.apache.hadoop.fs.Path
     val root = Files.createTempDirectory("graft-recoverall").toString
@@ -176,147 +87,31 @@ class LakeSpec extends SparkSpec {
     assert(!fs.exists(new Path(s"$root/b.swapbackup")))
   }
 
-  test("z-order layout prunes row groups on BOTH clustered columns") {
-    import org.apache.spark.sql.DataFrame
-    val root = Files.createTempDirectory("graft-zorder").toString
-    val events = Tables(spark, sfDir, "events")
-      .select(col("user_id"), col("value"), col("event_type"))
-    // force one row group per smallish file so min/max stats are the
-    // pruning unit at test scale
-    val zdir = s"$root/z"
-    val flat = s"$root/flat"
-    Lake.writeZOrdered(spark, events, zdir, "user_id", "value", nFiles = 32)
-    events.repartition(32).write.parquet(flat) // same file count, no order
-
-    // rows surviving parquet row-group pruning = the scan's output metric
-    def scanRows(df: DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numOutputRows").value
-      }.get
+  test("promoteStaging restores the old table when the promote rename fails or throws") {
+    import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+    val root = Files.createTempDirectory("graft-promote-fail").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    def write(n: Int, path: String): Unit =
+      spark.range(n).toDF("v").write.mode("overwrite").parquet(path)
+    /** Local FS whose rename of a `.staging` dir fails — by returning
+      * false or by throwing; every other call goes through. */
+    class FailingPromoteFs(throws: Boolean)
+        extends FilterFileSystem(FileSystem.getLocal(conf)) {
+      override def rename(src: Path, dst: Path): Boolean =
+        if (!src.getName.endsWith(".staging")) super.rename(src, dst)
+        else if (throws) throw new java.io.IOException("injected rename fault")
+        else false
     }
-    val total = events.count()
-    val uid = events.select(min(col("user_id"))).head().getLong(0)
-    val zA = scanRows(spark.read.parquet(zdir).filter(col("user_id") === uid))
-    val fA = scanRows(spark.read.parquet(flat).filter(col("user_id") === uid))
-    assert(zA < total / 2,
-      s"z-order should let min/max skip most row groups: read $zA of $total")
-    assert(zA <= fA, s"z-order ($zA rows) must not read more than flat ($fA)")
-    // the SECOND dimension also prunes — the property a plain sort on
-    // user_id cannot give
-    val zB = scanRows(spark.read.parquet(zdir).filter(col("value") < 1.0))
-    assert(zB < total,
-      s"value predicate should skip at least some row groups: $zB of $total")
-    // layout change must not change data
-    assert(spark.read.parquet(zdir).count() == total)
-  }
-
-  test("equi-depth z-order still prunes where linear quantization collapses") {
-    import org.apache.spark.sql.DataFrame
-    val root = Files.createTempDirectory("graft-zorder-ed").toString
-    // heavy-tailed column: the bulk lives in [0, 1000) but a handful
-    // of 1e12 outliers stretch the min/max range a billion-fold, so
-    // LINEAR quantization maps every bulk row to cell 0 — the curve
-    // then orders rows by b alone and every file spans the whole bulk
-    // a-range (no pruning on a). Equi-depth cells follow the
-    // QUANTILES, which the outliers barely move.
-    val n = 100000L
-    val skewed = spark.range(n).select(
-      when(col("id") % 10000 === 0, lit(1.0e12))
-        .otherwise((col("id") % 1000).cast("double")).as("a"),
-      ((col("id") * 7919) % 10000).cast("double").as("b"))
-    val linDir = s"$root/lin"
-    val edDir = s"$root/ed"
-    Lake.writeZOrdered(spark, skewed, linDir, "a", "b", nFiles = 32)
-    Lake.writeZOrderedEquiDepth(spark, skewed, edDir, "a", "b", nFiles = 32)
-
-    def scanRows(df: DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collectLeaves().collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numOutputRows").value
-      }.get
+    for (throws <- Seq(false, true)) {
+      val dst = new Path(s"$root/t-$throws")
+      write(10, dst.toString)
+      write(20, Lake.stagingPath(dst).toString)
+      intercept[Exception] {
+        Lake.promoteStaging(new FailingPromoteFs(throws),
+          Lake.stagingPath(dst), dst, Lake.backupPath(dst))
+      }
+      assert(spark.read.parquet(dst.toString).count() == 10,
+        s"old table must be back at dst (rename throws=$throws)")
     }
-    val pred = (d: DataFrame) => d.filter(col("a") >= 100 && col("a") < 110)
-    val linRows = scanRows(pred(spark.read.parquet(linDir)))
-    val edRows = scanRows(pred(spark.read.parquet(edDir)))
-    // linear: every file's a-min/max covers the bulk → reads ~all rows
-    assert(linRows > (n * 9) / 10,
-      s"expected linear quantization to fail to prune on skew: $linRows of $n")
-    // equi-depth: the 1% slice hits a few quantile cells → most files skip
-    assert(edRows <= n / 2 && edRows < linRows,
-      s"equi-depth should prune where linear can't: $edRows vs $linRows of $n")
-    // layout change must not change data
-    assert(spark.read.parquet(edDir).count() == n)
-    assert(spark.read.parquet(edDir).agg(sum(col("a"))).head().getDouble(0)
-      == skewed.agg(sum(col("a"))).head().getDouble(0))
-  }
-
-  test("z-order degenerate inputs (all-null column, empty frame) stay readable") {
-    val root = Files.createTempDirectory("graft-zorder-null").toString
-    // all-null clustering column: the stats pass returns null min/max —
-    // that dimension must collapse to a single cell, not NPE on
-    // Row.getDouble; the other dimension still orders the curve
-    val withNulls = spark.range(1000).select(
-      lit(null).cast("double").as("a"),
-      (col("id") % 100).cast("double").as("b"))
-    val nullDir = s"$root/nulls"
-    Lake.writeZOrdered(spark, withNulls, nullDir, "a", "b", nFiles = 4)
-    assert(spark.read.parquet(nullDir).count() == 1000)
-    assert(spark.read.parquet(nullDir).filter(col("a").isNull).count() == 1000)
-    // empty frame: null stats row AND zero rows through the range
-    // partitioner — output must still be a readable parquet table
-    val emptyDir = s"$root/empty"
-    Lake.writeZOrdered(spark, withNulls.limit(0), emptyDir, "a", "b", nFiles = 4)
-    assert(spark.read.parquet(emptyDir).count() == 0)
-    // the equi-depth variant has the same degenerate surface
-    // (percentile_approx → null) — prove both paths
-    val edNullDir = s"$root/ed-nulls"
-    Lake.writeZOrderedEquiDepth(spark, withNulls, edNullDir, "a", "b", nFiles = 4)
-    assert(spark.read.parquet(edNullDir).count() == 1000)
-    val edEmptyDir = s"$root/ed-empty"
-    Lake.writeZOrderedEquiDepth(
-      spark, withNulls.limit(0), edEmptyDir, "a", "b", nFiles = 4)
-    assert(spark.read.parquet(edEmptyDir).count() == 0)
-  }
-
-  test("schema-evolved tables read as one frame, old files null-filled") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-evolve").toString + "/t"
-    // v1 writer: (id, amount); later v2 writer adds a `source` column
-    Seq((1L, 10.0), (2L, 20.0)).toDF("id", "amount")
-      .write.mode("append").parquet(dir)
-    Seq((3L, 30.0, "api")).toDF("id", "amount", "source")
-      .write.mode("append").parquet(dir)
-
-    val merged = Lake.readEvolved(spark, dir,
-      defaults = Map("source" -> "legacy"))
-    val got = merged.collect()
-      .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2))).toMap
-    assert(got == Map(1L -> ((10.0, "legacy")), 2L -> ((20.0, "legacy")),
-      3L -> ((30.0, "api"))))
-
-    // the explicit-schema path (no footer sweep) gives the same view
-    val explicit = Lake.readEvolvedAs(spark, dir,
-      merged.schema, defaults = Map("source" -> "legacy"))
-    assert(explicit.collect()
-      .map(r => r.getLong(0) -> (r.getDouble(1), r.getString(2))).toMap == got)
-    // and reading with the CURRENT schema keeps v1 files readable even
-    // if only v2's schema is known to the catalog
-    val v2Only = Lake.readEvolvedAs(spark, dir,
-      Seq((0L, 0.0, "")).toDF("id", "amount", "source").schema)
-    assert(v2Only.filter(col("source").isNull).count() == 2)
-  }
-
-  test("custom functions are SQL-registered") {
-    GraftSession.registerFunctions(spark)
-    val row = spark.sql(
-      """SELECT simhash64(array('a','b','c')) AS h,
-        |  dot_long(vector_quantize(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT))),
-        |           vector_quantize(array(CAST(2.0 AS FLOAT), CAST(0.5 AS FLOAT)))) AS d
-        |""".stripMargin).head()
-    assert(row.getLong(1) == 4L * 1000000000000L) // 1.5*2 + 2*0.5 = 4.0 at scale 12
-    assert(row.getLong(0) != 0L)
   }
 }

@@ -7,10 +7,17 @@ class RelationalSpec extends SparkSpec {
   import spark.implicits._
 
   test("every registered query returns rows on sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
-      assert(n > 0, s"$name returned 0 rows")
+    // run every query, then fail once naming each failure — a failure
+    // must not hide the ones registered after it
+    val failures = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+      scala.util.Try(fn(spark, sfDir).count()) match {
+        case scala.util.Success(n) if n > 0 => None
+        case scala.util.Success(_) => Some(s"$name returned 0 rows")
+        case scala.util.Failure(e) => Some(s"$name failed: $e")
+      }
     }
+    assert(failures.isEmpty,
+      s"${failures.size} queries failed:\n${failures.mkString("\n")}")
   }
 
   test("every query has an oracle or a documented omission") {

@@ -71,15 +71,6 @@ class SourcesSpec extends SparkSpec {
     assert(n > 0)
   }
 
-  test("zstd-compressed partitioned parquet reads back identically") {
-    val dir = Files.createTempDirectory("graft-zstd").toString + "/e"
-    graft.sources.Lake.writeDatePartitioned(events, "ts", dir)
-    val back = spark.read.parquet(dir).drop("part_date")
-    assert(back.count() == events.count())
-    val f = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part_date="))
-    assert(f.nonEmpty)
-  }
-
   test("bucketed artifact: publish once, re-register across catalogs, probe-side-only shuffle") {
     import graft.sources.ArtifactStore
     val dir = Files.createTempDirectory("graft-bart").toString + "/art"

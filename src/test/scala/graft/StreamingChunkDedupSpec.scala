@@ -118,6 +118,26 @@ class StreamingChunkDedupSpec extends SparkSpec {
       "hashes must survive a mid-swap crash")
   }
 
+  test("a batch read after a crashed compaction swap still suppresses folded chunks") {
+    val out = Files.createTempDirectory("graft-sdedup-crash-read").toString
+    StreamingChunkDedup.writeBatch(spark, mk(Seq((1L, uniq("a")))), 0L, out)
+    StreamingChunkDedup.writeBatch(spark, mk(Seq((2L, uniq("b")))), 1L, out)
+    StreamingChunkDedup.writeBatch(spark, mk(Seq((3L, uniq("c")))), 2L, out)
+    StreamingChunkDedup.compactLedger(spark, out, keepLast = 2)
+    // crash between the next compaction's two swap renames: the only
+    // copy of batch 0's hashes sits in the backup, which partition
+    // discovery hides
+    val ledger = new java.io.File(s"$out/ledger")
+    assert(new java.io.File(ledger, "graft_batch_id=-1")
+      .renameTo(new java.io.File(ledger, "_compact_backup")))
+    // no compactLedger call: the batch's own ledger read must heal
+    StreamingChunkDedup.writeBatch(spark, mk(Seq((9L, uniq("a")))), 3L, out)
+    assert(StreamingChunkDedup.readSink(spark, out).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap.apply(9L) == 0,
+      "a folded chunk re-entered the corpus after a crashed swap")
+    assert(new java.io.File(ledger, "graft_batch_id=-1").isDirectory)
+  }
+
   test("firstOccurrence packs integer doc_ids beyond 2048 without overflow") {
     import spark.implicits._
     // IntegerType doc_id (a user-supplied streaming schema shape):

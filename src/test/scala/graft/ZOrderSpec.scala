@@ -47,6 +47,42 @@ class ZOrderSpec extends SparkSpec {
     }
   }
 
+  test("zorderPublish prunes a heavy-tailed column by its quantiles") {
+    // the bulk of `a` lives in [0, 1000) but a 1e12 outlier every
+    // 10,000 rows stretches its min/max a billion-fold; equi-depth
+    // boundaries follow the quantiles, which the outliers barely move,
+    // so a 1% slice of the bulk still lands in a few curve cells
+    val n = 100000L
+    val skewed = spark.range(n).select(
+      when(col("id") % 10000 === 0, lit(1.0e12))
+        .otherwise((col("id") % 1000).cast("double")).as("a"),
+      ((col("id") * 7919) % 10000).cast("double").as("b"))
+    val base = mkBase()
+    Versioned.publish(spark, base, Seq(TableSpec("t", skewed)))
+    Versioned.zorderPublish(spark, base, "t", Seq("a", "b"), files = 32)
+    // a ∈ [100, 110): the pruned read's bounds are inclusive
+    val (lo, hi) = (100.0, Math.nextDown(110.0))
+    val Some((_, sel, total)) =
+      Versioned.prunedFilesAt(spark, base, "t", 2L, "a", lo, hi)
+    assert(total > 1 && sel.size * 2 <= total,
+      s"a-probe selected ${sel.size} of $total files")
+    val pruned = Versioned.readPruned(spark, base, "t", "a", lo, hi)
+    val plain = skewed.filter(col("a") >= 100 && col("a") < 110)
+    assert(pruned.count() == plain.count())
+    assert(collectSet(pruned) == collectSet(plain))
+  }
+
+  test("zorderPublish of an empty table refuses loudly and commits nothing") {
+    val base = mkBase()
+    Versioned.publish(spark, base, Seq(TableSpec("t", grid.limit(0))))
+    val e = intercept[IllegalArgumentException] {
+      Versioned.zorderPublish(spark, base, "t", Seq("x", "y"), files = 4)
+    }
+    assert(e.getMessage.contains("no non-null values"), e.getMessage)
+    assert(Versioned.currentVersion(spark, base).contains(1L))
+    assert(Versioned.read(spark, base, "t").count() == 0)
+  }
+
   test("a lexicographic sort cannot prune its second column; z-order can") {
     val lex = mkBase(); val zed = mkBase()
     Versioned.publish(spark, lex, Seq(TableSpec("t", grid)))
