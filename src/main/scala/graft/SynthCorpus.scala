@@ -47,7 +47,7 @@ object SynthCorpus {
     import spark.implicits._
 
     // ---- documents ----------------------------------------------------
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables(spark, src, "documents")
     // bounded vocabulary collect (deterministic order): the sampling
     // pool replicas draw from — the source corpus's own word shapes
     val vocab = docs
@@ -86,7 +86,7 @@ object SynthCorpus {
       .write.mode(SaveMode.Overwrite).parquet(s"$out/documents.parquet")
 
     // ---- embeddings ---------------------------------------------------
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables(spark, src, "embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
       .as[(Long, Array[Float], Int)]
     val replicasE = emb.flatMap { case (id, v, label) =>
@@ -118,8 +118,8 @@ object SynthCorpus {
           false, spark.sessionState.newHadoopConf())
       }
 
-    val nd = spark.read.parquet(s"$out/documents.parquet").count()
-    val ne = spark.read.parquet(s"$out/embeddings.parquet").count()
+    val nd = Tables(spark, out, "documents").count()
+    val ne = Tables(spark, out, "embeddings").count()
     println(s"""{"synth":"$out","factor":$factor,"documents":$nd,"embeddings":$ne}""")
     spark.stop()
   }

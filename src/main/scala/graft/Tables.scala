@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -22,28 +23,78 @@ object Tables {
 
   /** Footer-schema cache — the catalog seam the scaladoc above names,
     * applied to schema resolution. A bare-path `spark.read.parquet`
-    * pays a footer-read JOB per plan for schema inference; across a
-    * suite pass that is hundreds of ~50 ms jobs re-inferring schemas
-    * that never change (guide §6 — the same reason catalog tables
-    * resolve schema from the metastore, and §1.2 "per-task work": the
-    * job floor, not the scan, is the cost at bench grain). Caches
-    * METADATA ONLY (a StructType), keyed by the table's file listing
-    * (path:length:mtime — [[fileFingerprint]], the ArtifactStore
-    * staleness discipline): a regenerated table misses the key and
-    * re-reads its footer. Every action still scans the parquet files;
-    * results and file listings are never cached here. */
+    * resolves its schema with a one-task Spark job
+    * (`mergeSchemasInParallel`) on EVERY plan; at bench grain the job
+    * floor, not the scan, is the cost (guide §1.2 "per-task work").
+    * Here no read pays that job: a first read resolves the schema
+    * from one footer on the driver ([[footerRead]]), and later reads
+    * hit this cache. It holds METADATA ONLY (a StructType), keyed by
+    * the paths' file listings (path:length:mtime — [[fileFingerprint]],
+    * the ArtifactStore staleness discipline) and by the session's
+    * footer-conversion settings: a regenerated table misses the key
+    * and re-reads its footer. Every action still scans the parquet
+    * files; results and file listings are never cached here. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+    String, StructType]
 
-  /** Shared by the table loaders above and the artifact/lake readers
-    * ([[graft.sources.ArtifactStore]]): one fingerprint-guarded schema
-    * per path per JVM, fresh reader every call. */
-  private[graft] def readParquetCached(spark: SparkSession, path: String)
+  /** The one parquet reader of bare paths — tables, artifacts, lake
+    * data dirs, streaming ledgers and sinks: one fingerprint-guarded
+    * schema per path set per JVM, fresh reader every call. Several
+    * paths read as one frame, as `spark.read.parquet(paths: _*)`. */
+  private[graft] def readParquetCached(spark: SparkSession, paths: String*)
       : DataFrame = {
-    val key = s"$path@${fileFingerprint(spark, path)}"
-    val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+    val c = spark.sessionState.conf
+    val settings = Seq(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+      c.parquetInferTimestampNTZEnabled, c.legacyParquetNanosAsLong)
+    val key = paths.map(p => s"$p@${fileFingerprint(spark, p)}")
+      .mkString("|") + settings.mkString("|", ",", "")
+    Option(schemaCache.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None =>
+        val df = footerRead(spark, paths)
+        schemaCache.put(key, df.schema)
+        df
+    }
+  }
+
+  /** `spark.read.parquet(paths: _*)` without its schema-inference job.
+    * Spark's inference (no `mergeSchema`) reads ONE footer: of the file
+    * index's leaf files sorted by path, `_common_metadata` if present,
+    * else `_metadata`, else the first data file. Here the same file
+    * index lists on the driver, the same footer is read on the driver
+    * and converted by the same converter under the session's settings
+    * (`nanosAsLong`, binary/int96 handling); the reader given that
+    * data schema adds the partition columns, whose discovery is a
+    * driver-side listing. Paths with no data file fall through to
+    * Spark's own inference, which fails loudly
+    * (`UNABLE_TO_INFER_SCHEMA`). */
+  private[graft] def footerRead(spark: SparkSession, paths: Seq[String])
+      : DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val files = new InMemoryFileIndex(spark, paths.map(new Path(_)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val summaries = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(files.find(f => !summaries(f.getPath.getName))) match {
+      case None => spark.read.parquet(paths: _*)
+      case Some(st) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val data = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(data).parquet(paths: _*)
+    }
   }
 
   /** `events.ts` has shipped in two generations of the testdata:
@@ -76,7 +127,7 @@ object Tables {
     }
 
   /** Streaming twin of `events`: `readStream` needs an explicit schema,
-    * so borrow the batch reader's footer-resolved one, then apply the
+    * so borrow the batch seam's footer-resolved one, then apply the
     * same ts adaptation. `path` may be the parquet file itself (file
     * streams list a directory, so a file streams its parent under a
     * glob) or a directory of arriving files. */
@@ -85,7 +136,7 @@ object Tables {
     val f = new java.io.File(path)
     val (base, glob) =
       if (f.isFile) (f.getParent, Some(f.getName)) else (path, None)
-    val schema = spark.read.parquet(path).schema
+    val schema = readParquetCached(spark, path).schema
     val reader = spark.readStream.schema(schema)
     normalizeEventsTs(
       glob.fold(reader)(g => reader.option("pathGlobFilter", g)).parquet(base))

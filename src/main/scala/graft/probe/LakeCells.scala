@@ -133,7 +133,8 @@ object LakeCells {
       .localCheckpoint() // identical input to both postures, built once
     val bucketed = Dedup.windowIndex(spark, c.sfDir) // ensures it exists
     // the same files, layout undeclared: plain parquet read
-    val plainIdx = spark.read.parquet(Dedup.windowIndexPath(spark, c.sfDir))
+    val plainIdx =
+      Tables.readParquetCached(spark, Dedup.windowIndexPath(spark, c.sfDir))
     // materialize through sum(dup_windows): a bare count() lets the
     // optimizer ELIMINATE the probe join entirely (left join with a
     // unique-keyed aggregate side, no columns consumed)
@@ -393,8 +394,8 @@ object LakeCells {
 
     val frags1 = runAll(c.sfDir, "x1")
     val big = tmp("graft-lake-synth")
-    val li = spark.read.parquet(s"${c.sfDir}/lineitem.parquet")
-    val ord = spark.read.parquet(s"${c.sfDir}/orders.parquet")
+    val li = Tables(spark, c.sfDir, "lineitem")
+    val ord = Tables(spark, c.sfDir, "orders")
     val okStride = math.max(
       li.agg(max(col("l_orderkey"))).head().getLong(0),
       ord.agg(max(col("o_orderkey"))).head().getLong(0)) + 1
@@ -584,7 +585,8 @@ object LakeCells {
         .filter(_.getName.endsWith(".parquet")).toSeq
       out ++= Seq(s"${p}_files" -> files.size,
         s"${p}_write_tasks" -> files.map(_.getName.split("-")(1)).distinct.size,
-        s"${p}_max_file_rows" -> files.map(f => spark.read.parquet(f.toString).count()).max)
+        s"${p}_max_file_rows" ->
+          files.map(f => Tables.readParquetCached(spark, f.toString).count()).max)
     }
     def frame(ids: DataFrame) = ids.select(
       col("id").as("k"),

@@ -140,7 +140,7 @@ object QueryCells {
     }
     time("spread_getNumPartitions", 10) {
       graft.operators.Spread.byKey(
-        spark.read.parquet(s"$sfDir/documents.parquet"), col("doc_id"))
+        Tables(spark, sfDir, "documents"), col("doc_id"))
     }
   }
 

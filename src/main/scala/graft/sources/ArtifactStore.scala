@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Write-once publication of content-addressed derived tables — the
@@ -50,7 +51,6 @@ object ArtifactStore {
     * present predecessor means merge-the-delta, an absent one means
     * full build. */
   def readIfPresent(spark: SparkSession, out: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
     val outPath = new Path(out)
     val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(new Path(outPath, "_SUCCESS")))
@@ -66,7 +66,6 @@ object ArtifactStore {
     * resume-from-newest walk wants (one FS call per probe, never a
     * parquet footer read). */
   def exists(spark: SparkSession, out: String): Boolean = {
-    import org.apache.hadoop.fs.Path
     val outPath = new Path(out)
     val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
     fs.exists(new Path(outPath, "_SUCCESS"))
@@ -80,7 +79,6 @@ object ArtifactStore {
     * standing-side exchange incremental maintenance exists to avoid. */
   def readIfPresentBucketed(spark: SparkSession, out: String,
       bucketCol: String, buckets: Int): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
     val outPath = new Path(out)
     val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(new Path(outPath, "_SUCCESS")))
@@ -92,20 +90,13 @@ object ArtifactStore {
     * first when absent. `build` is evaluated only on a miss. */
   def readOrPublish(spark: SparkSession, out: String)
       (build: => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val outPath = new Path(out)
     val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new Path(outPath, "_SUCCESS"))) {
       val staging = new Path(outPath.getParent,
         s".staging-${outPath.getName}-${java.util.UUID.randomUUID}")
       build.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      fs.mkdirs(outPath.getParent)
-      // an `out` without _SUCCESS is a crashed publish — clear it; a
-      // failed rename means a concurrent winner published a
-      // value-identical table — drop ours and read theirs
-      if (fs.exists(outPath) && !fs.exists(new Path(outPath, "_SUCCESS")))
-        fs.delete(outPath, true)
-      if (!fs.rename(staging, outPath)) fs.delete(staging, true)
+      promote(spark, staging, outPath)
     }
     graft.Tables.readParquetCached(spark, out)
   }
@@ -135,7 +126,6 @@ object ArtifactStore {
   def readOrPublishBucketed(spark: SparkSession, out: String,
       bucketCol: String, buckets: Int, prealigned: Boolean = false)
       (build: => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val outPath = new Path(out)
     val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(new Path(outPath, "_SUCCESS"))) {
@@ -178,12 +168,26 @@ object ArtifactStore {
             new Path(staging, "part-00000-empty_00000.c000.parquet")))
         fs.delete(empty, true)
       }
-      fs.mkdirs(outPath.getParent)
-      if (fs.exists(outPath) && !fs.exists(new Path(outPath, "_SUCCESS")))
-        fs.delete(outPath, true)
-      if (!fs.rename(staging, outPath)) fs.delete(staging, true)
+      promote(spark, staging, outPath)
     }
     bucketedTable(spark, out, bucketCol, buckets)
+  }
+
+  /** Promote a finished staging dir to `out`. An `out` without
+    * `_SUCCESS` is a crashed publish and is cleared first. The rename
+    * refuses an existing `out` (`Rename.NONE`): `FileSystem.rename`
+    * onto an existing directory would move the staging dir INTO it on
+    * the local FS and HDFS. A refused rename means a concurrent winner
+    * published a value-identical table — drop ours and read theirs. */
+  private def promote(spark: SparkSession, staging: Path, out: Path): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = out.getFileSystem(conf)
+    fs.mkdirs(out.getParent)
+    if (fs.exists(out) && !fs.exists(new Path(out, "_SUCCESS")))
+      fs.delete(out, true)
+    try FileContext.getFileContext(out.toUri, conf)
+      .rename(staging, out, Options.Rename.NONE)
+    catch { case _: FileAlreadyExistsException => fs.delete(staging, true) }
   }
 
   /** Session-local registration of a published bucketed artifact (see
@@ -199,10 +203,10 @@ object ArtifactStore {
     * properties, and a registration that finds a DIFFERENT mtime under
     * the same path (a deleted-and-republished artifact in one session)
     * drops and recreates the entry from the current parquet footers
+    * (the [[graft.Tables.readParquetCached]] seam, so no schema job)
     * instead of serving stale schema/layout metadata. */
   private def bucketedTable(spark: SparkSession, out: String,
       bucketCol: String, buckets: Int): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(out.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(16)
     val name = s"graft_art_$digest"
@@ -226,7 +230,7 @@ object ArtifactStore {
         spark.sql(s"DROP TABLE $name")
     }
     if (!spark.catalog.tableExists(name)) {
-      val schemaDdl = spark.read.parquet(out).schema.toDDL
+      val schemaDdl = graft.Tables.readParquetCached(spark, out).schema.toDDL
       spark.sql(
         s"""CREATE TABLE $name ($schemaDdl) USING PARQUET
            |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)

@@ -32,8 +32,7 @@ object Sinks {
   def insertIfAbsent(spark: SparkSession, df: DataFrame, path: String,
       keyCols: Seq[String]): Unit = {
     Lake.recoverSwap(spark, path) // self-heal a crashed earlier swap
-    val exists = scala.util.Try(spark.read.parquet(path)).toOption
-    val fresh = exists match {
+    val fresh = existing(spark, path) match {
       case Some(cur) => df.join(cur.select(keyCols.map(col): _*)
           .dropDuplicates(), keyCols, "left_anti")
       case None => df
@@ -41,6 +40,17 @@ object Sinks {
     // first-wins within the incoming batch too (MySQL PK semantics)
     fresh.dropDuplicates(keyCols)
       .write.mode(SaveMode.Append).parquet(path)
+  }
+
+  /** The table at `path`, or None when no table is there. Only absence
+    * reads as "no table": any other read failure propagates, so an
+    * upsert can never promote the incoming batch alone over a table it
+    * failed to read. */
+  private def existing(spark: SparkSession, path: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      Some(graft.Tables.readParquetCached(spark, path))
+    else None
   }
 
   /** S4: upsert (`INSERT … ON DUPLICATE KEY UPDATE`): incoming rows
@@ -52,8 +62,7 @@ object Sinks {
     // absent with a committed staging — recover before merging, or the
     // merge silently treats the table as empty
     Lake.recoverSwap(spark, path)
-    val existing = scala.util.Try(spark.read.parquet(path)).toOption
-    val merged = existing match {
+    val merged = existing(spark, path) match {
       case Some(cur) =>
         cur.join(df.select(keyCols.map(col): _*).dropDuplicates(),
           keyCols, "left_anti").unionByName(df)
@@ -157,7 +166,7 @@ object Sinks {
     val hasTable = fs.exists(root) &&
       fs.listStatus(root).exists(_.getPath.getName.startsWith(s"$partCol="))
     val merged = if (hasTable) {
-      val cur = spark.read.parquet(path)
+      val cur = graft.Tables.readParquetCached(spark, path)
         .filter(col(partCol).cast("string").isin(touched.toIndexedSeq: _*))
       cur.join(incoming.select(keyCols.map(col): _*).dropDuplicates(),
           keyCols, "left_anti")
@@ -192,7 +201,7 @@ object Sinks {
   /** Read back a bucketed-upsert table (the `_kb` partition column is
     * internal layout, not data — stripped here). */
   def readBucketed(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = graft.Tables.readParquetCached(spark, path)
     if (df.columns.contains("_kb")) df.drop("_kb") else df
   }
 

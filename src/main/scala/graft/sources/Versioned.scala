@@ -441,8 +441,8 @@ object Versioned {
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                 all.schema)
             case Some(sel) if sel.size == files.size => all
-            case Some(sel) =>
-              spark.read.option("basePath", dir)
+            case Some(sel) => // the dir's schema: no inference job
+              spark.read.schema(all.schema).option("basePath", dir)
                 .parquet(sel.map(fl => new Path(dir, fl).toString): _*)
           }
       }
@@ -490,8 +490,8 @@ object Versioned {
                 spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
                 all.schema)
             case Some(sel) if sel.size == files.size => all
-            case Some(sel) =>
-              spark.read.option("basePath", dir)
+            case Some(sel) => // the dir's schema: no inference job
+              spark.read.schema(all.schema).option("basePath", dir)
                 .parquet(sel.map(fl => new Path(dir, fl).toString): _*)
           }
       }
@@ -599,6 +599,7 @@ object Versioned {
               graft.Tables.readParquetCached(spark, dir)
             case Some(files) =>
               spark.read
+                .schema(graft.Tables.readParquetCached(spark, dir).schema)
                 .option("basePath", dir) // keep partition-dir columns
                 .parquet(files.map(fl => new Path(dir, fl).toString): _*)
           }
@@ -1360,7 +1361,7 @@ object Versioned {
     val bloomCols = bloomColsAt(spark, base, table, cur)
     publishWith(spark, base, cur) { (f, b, next) =>
       val merged = tail.map(e =>
-          spark.read.parquet(new Path(b, e.rel).toString))
+          graft.Tables.readParquetCached(spark, new Path(b, e.rel).toString))
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val frame =
         if (sortBy.isEmpty) merged.coalesce(files)
@@ -1447,7 +1448,7 @@ object Versioned {
         if (tombs.isEmpty || prefix.isEmpty) None // no prefix rows to remove
         else {
           val merged = tombs.map(e =>
-              spark.read.parquet(new Path(b, e.rel).toString))
+              graft.Tables.readParquetCached(spark, new Path(b, e.rel).toString))
             .reduce(_.unionByName(_)).distinct
           val rel = tombDirName(table, next)
           merged.write.mode(SaveMode.Overwrite)
@@ -1457,7 +1458,7 @@ object Versioned {
           Some(RefEntry('t', rel))
         }
       val dataEntry = foldEntriesOpt(spark, b, tail,
-          dir => spark.read.parquet(dir)).map { folded =>
+          dir => graft.Tables.readParquetCached(spark, dir)).map { folded =>
         val frame =
           if (sortBy.isEmpty) folded.coalesce(files)
           else folded.repartitionByRange(files, sortBy.map(col): _*)
@@ -1489,7 +1490,8 @@ object Versioned {
       f.getContentSummary(new Path(b, e.rel)).getLength < smallBytes &&
         (e.kind != 't' || {
           val cols =
-            spark.read.parquet(new Path(b, e.rel).toString).columns.toSet
+            graft.Tables.readParquetCached(spark, new Path(b, e.rel).toString)
+              .columns.toSet
           tombCols match {
             case None => tombCols = Some(cols); true
             case Some(c) => c == cols
@@ -1640,7 +1642,7 @@ object Versioned {
     val statCols = statsColsAt(spark, base, table, cur)
     publishWith(spark, base, cur) { (f, b, next) =>
       val merged = tail.map(e =>
-          spark.read.parquet(new Path(b, e.rel).toString))
+          graft.Tables.readParquetCached(spark, new Path(b, e.rel).toString))
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val z = "__graft_z"
       val frame = merged

@@ -227,7 +227,7 @@ object ZoneBlooms {
     val conf = spark.sessionState.newHadoopConf()
     val dir = new Path(dataDir)
     val f = dir.getFileSystem(conf)
-    val df0 = spark.read.parquet(dataDir)
+    val df0 = graft.Tables.readParquetCached(spark, dataDir)
     cols.foreach(c => require(df0.columns.contains(c),
       s"bloom column '$c' not in $dataDir (has ${df0.columns.mkString(",")})"))
     // footer row counts → per-file bloom sizes (broadcast; tiny)

@@ -55,7 +55,7 @@ object StreamingChunkDedup {
       import spark.implicits._
       Seq.empty[String].toDF("h")
     } else
-      spark.read.parquet(ledgerDir)
+      graft.Tables.readParquetCached(spark, ledgerDir)
         .filter(col("graft_batch_id") =!= excludeBatch)
         .select(col("h"))
   }
@@ -88,7 +88,8 @@ object StreamingChunkDedup {
 
   /** Read the deduplicated output back as one frame. */
   def readSink(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/clean").drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, s"$outDir/clean")
+      .drop("graft_batch_id")
 
   /** Fold ledger partitions older than the newest `keepLast` batches
     * into the reserved compacted partition, deduplicating hashes on
@@ -99,7 +100,8 @@ object StreamingChunkDedup {
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/ledger", keepLast,
-      dirs => spark.read.parquet(dirs: _*).select(col("h")).distinct())
+      dirs => graft.Tables.readParquetCached(spark, dirs: _*)
+        .select(col("h")).distinct())
 
   /** Start the deduplicating ingest over a directory of parquet
     * document files. */

@@ -65,8 +65,8 @@ object StreamingCms {
     * folded-but-undeleted batch dir ([[LedgerCompaction]]). */
   def readSketch(spark: SparkSession, outDir: String): DataFrame = {
     LedgerCompaction.heal(spark, s"$outDir/sketch")
-    sumMatrices(
-      spark.read.parquet(s"$outDir/sketch").drop("graft_batch_id"))
+    sumMatrices(graft.Tables.readParquetCached(spark, s"$outDir/sketch")
+      .drop("graft_batch_id"))
   }
 
   /** Fold ledger partitions older than the newest `keepLast` batches
@@ -81,7 +81,7 @@ object StreamingCms {
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/sketch", keepLast,
-      dirs => sumMatrices(spark.read.parquet(dirs: _*)))
+      dirs => sumMatrices(graft.Tables.readParquetCached(spark, dirs: _*)))
 
   /** Start sketching a directory of parquet document files. Pass
     * `maxFilesPerTrigger` to bound batch size (and, in the spec, to

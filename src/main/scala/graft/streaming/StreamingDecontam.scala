@@ -51,7 +51,7 @@ object StreamingDecontam {
   /** Read a clean/flagged sink back as one frame, hiding the per-batch
     * idempotency directories (see [[StreamingQuality.readSink]]). */
   def readSink(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir).drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, sinkDir).drop("graft_batch_id")
 
   /** Start the decontaminating ingest over a directory of parquet
     * document files. Rows sharing no word-3-gram with `evalSet` land

@@ -54,7 +54,7 @@ object StreamingDeltaDedup {
   /** Read a kept/dup sink back as one frame, hiding the per-batch
     * idempotency directories. */
   def readSink(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir).drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, sinkDir).drop("graft_batch_id")
 
   /** Start the dedup ingest over a directory of parquet document
     * files, checking each batch against `corpus` (any frame with

@@ -57,8 +57,8 @@ object StreamingDsir {
     * cannot tolerate a folded-but-undeleted batch dir). */
   def readCounts(spark: SparkSession, outDir: String): DataFrame = {
     LedgerCompaction.heal(spark, s"$outDir/counts")
-    sumCounts(
-      spark.read.parquet(s"$outDir/counts").drop("graft_batch_id"))
+    sumCounts(graft.Tables.readParquetCached(spark, s"$outDir/counts")
+      .drop("graft_batch_id"))
   }
 
   /** Fold ledger partitions older than the newest `keepLast` batches
@@ -68,7 +68,7 @@ object StreamingDsir {
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/counts", keepLast,
-      dirs => sumCounts(spark.read.parquet(dirs: _*)))
+      dirs => sumCounts(graft.Tables.readParquetCached(spark, dirs: _*)))
 
   /** Start counting a directory of parquet document files (needs
     * `text` and `lang` columns — the class-conditional statistic). */

@@ -55,7 +55,7 @@ object StreamingEmbedDedup {
   /** Read a kept/dup sink back as one frame, hiding the per-batch
     * idempotency directories. */
   def readSink(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir).drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, sinkDir).drop("graft_batch_id")
 
   /** Start the embedding-dedup ingest against a VERSIONED embeddings
     * lake — [[StreamingWindowMass.startVersioned]]'s contract for the

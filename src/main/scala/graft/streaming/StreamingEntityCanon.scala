@@ -55,7 +55,7 @@ object StreamingEntityCanon {
   /** Read a known/fresh sink back as one frame, hiding the per-batch
     * idempotency directories. */
   def readSink(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir).drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, sinkDir).drop("graft_batch_id")
 
   /** Start the canonicalization ingest over a directory of parquet
     * part files, resolving each batch against `catalog` (any

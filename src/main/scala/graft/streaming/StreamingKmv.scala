@@ -69,8 +69,8 @@ object StreamingKmv {
     * ([[LedgerCompaction]]). */
   def readSketches(spark: SparkSession, outDir: String): DataFrame = {
     LedgerCompaction.heal(spark, s"$outDir/sketch")
-    mergeSketches(
-      spark.read.parquet(s"$outDir/sketch").drop("graft_batch_id"))
+    mergeSketches(graft.Tables.readParquetCached(spark, s"$outDir/sketch")
+      .drop("graft_batch_id"))
   }
 
   /** Fold ledger partitions older than the newest `keepLast` batches
@@ -84,7 +84,7 @@ object StreamingKmv {
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/sketch", keepLast,
-      dirs => mergeSketches(spark.read.parquet(dirs: _*)))
+      dirs => mergeSketches(graft.Tables.readParquetCached(spark, dirs: _*)))
 
   /** Start sketching a directory of parquet document files (needs
     * `source` and `text` columns). Pass `maxFilesPerTrigger` to bound

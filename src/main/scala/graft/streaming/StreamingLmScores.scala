@@ -60,7 +60,8 @@ object StreamingLmScores {
     * batch dir would duplicate rows). */
   def readScores(spark: SparkSession, outDir: String): DataFrame = {
     LedgerCompaction.heal(spark, s"$outDir/scores")
-    spark.read.parquet(s"$outDir/scores").drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, s"$outDir/scores")
+      .drop("graft_batch_id")
   }
 
   /** Head/middle/tail buckets over everything ingested so far —
@@ -78,7 +79,7 @@ object StreamingLmScores {
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/scores", keepLast,
-      dirs => spark.read.parquet(dirs: _*))
+      dirs => graft.Tables.readParquetCached(spark, dirs: _*))
 
   /** Start scoring a directory of parquet document files under the
     * frozen `lm`. Pass `maxFilesPerTrigger` to bound batch size (and,

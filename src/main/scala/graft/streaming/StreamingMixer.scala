@@ -57,7 +57,7 @@ object StreamingMixer {
   /** Read the kept sink back as one frame, hiding the per-batch
     * idempotency directories. */
   def readSink(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir).drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, sinkDir).drop("graft_batch_id")
 
   /** Start the mixing ingest over a directory of parquet document
     * files with a static (lang, rate) table. */

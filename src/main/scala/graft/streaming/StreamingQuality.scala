@@ -60,7 +60,7 @@ object StreamingQuality {
     * landed pre-release), and a blanket drop would silently delete a
     * genuine document column that happens to be called `batch`. */
   def readSink(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir).drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, sinkDir).drop("graft_batch_id")
 
   /** Start the quality-gated ingest over a directory of parquet
     * document files. Rows with `quality_score >= minScore` land in

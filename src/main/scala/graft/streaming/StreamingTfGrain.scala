@@ -60,7 +60,7 @@ object StreamingTfGrain {
     * here, exactly like the sketch ledgers' sums. */
   def readGrain(spark: SparkSession, outDir: String): DataFrame = {
     LedgerCompaction.heal(spark, s"$outDir/grain")
-    spark.read.parquet(s"$outDir/grain")
+    graft.Tables.readParquetCached(spark, s"$outDir/grain")
       .select("term", "doc_id", "tf")
   }
 
@@ -75,7 +75,7 @@ object StreamingTfGrain {
   def compactLedger(spark: SparkSession, outDir: String,
       keepLast: Int = 2): Unit =
     LedgerCompaction.compact(spark, s"$outDir/grain", keepLast,
-      dirs => spark.read.parquet(dirs: _*)
+      dirs => graft.Tables.readParquetCached(spark, dirs: _*)
         .select("term", "doc_id", "tf"))
 
   /** Start graining a directory of parquet document files. Pass

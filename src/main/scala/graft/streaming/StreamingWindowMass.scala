@@ -39,7 +39,8 @@ object StreamingWindowMass {
 
   /** Read the scored ledger back as one frame. */
   def readSink(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/scored").drop("graft_batch_id")
+    graft.Tables.readParquetCached(spark, s"$outDir/scored")
+      .drop("graft_batch_id")
 
   /** Start the scoring ingest against a VERSIONED corpus lake: every
     * micro-batch first re-resolves the lake's current version (one

@@ -258,4 +258,42 @@ class SinksSpec extends SparkSpec {
     assert(Sinks.DerbyUpsert.bindOrder(Seq("a", "b", "c"), Seq("b", "a")) ==
       Seq(1, 0, 2, 0, 1, 2))
   }
+
+  test("a read failure of an existing table propagates: no upsert or insert over it") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.faultyread.impl", classOf[FaultyReadFs].getName)
+    val local = Files.createTempDirectory("graft-sink-fault").toString + "/t"
+    val dir = s"faultyread://$local"
+    val old = Map(1L -> "a", 2L -> "b")
+    Sinks.upsertParquet(spark, old.toSeq.toDF("k", "v"), dir, Seq("k"))
+    def rows() = spark.read.parquet(local).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows() == old)
+    FaultyReadFs.failing = Some(local)
+    try {
+      val up = intercept[java.io.IOException](Sinks.upsertParquet(
+        spark, Seq((3L, "c")).toDF("k", "v"), dir, Seq("k")))
+      assert(up.getMessage.contains("injected read fault"), up.getMessage)
+      intercept[java.io.IOException](Sinks.insertIfAbsent(
+        spark, Seq((1L, "dup"), (3L, "c")).toDF("k", "v"), dir, Seq("k")))
+    } finally FaultyReadFs.failing = None
+    assert(rows() == old, "the old rows must stay the table")
+  }
+}
+
+/** The local FS under the `faultyread:` scheme. While
+  * [[FaultyReadFs.failing]] names a directory, listing it fails: a table
+  * that exists but cannot be read. */
+class FaultyReadFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getUri: java.net.URI = java.net.URI.create("faultyread:///")
+  override def getScheme: String = "faultyread"
+  override def listStatus(f: Path): Array[FileStatus] =
+    if (FaultyReadFs.failing.contains(f.toUri.getPath.stripSuffix("/")))
+      throw new java.io.IOException(s"injected read fault: $f")
+    else super.listStatus(f)
+}
+
+object FaultyReadFs {
+  @volatile var failing: Option[String] = None
 }

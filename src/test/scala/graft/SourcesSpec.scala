@@ -110,4 +110,28 @@ class SourcesSpec extends SparkSpec {
         s"artifact scan must read as bucketed:\n$plan")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
+
+  test("a losing artifact publish drops its staging dir and reads the winner's table") {
+    import graft.sources.ArtifactStore
+    import org.apache.spark.sql.DataFrame
+    val root = Files.createTempDirectory("graft-publish-race").toString
+    def frame = spark.range(50).selectExpr("id AS k", "id * 3 AS v")
+    def rows(df: DataFrame) = df.orderBy("k").collect().toSeq
+    for (bucketed <- Seq(false, true)) {
+      val out = s"$root/art-$bucketed"
+      def publish(build: => DataFrame): DataFrame =
+        if (bucketed) ArtifactStore.readOrPublishBucketed(spark, out, "k", 4)(build)
+        else ArtifactStore.readOrPublish(spark, out)(build)
+      // the loser's build runs a whole winning publish first, so the
+      // loser finds `out` published when it promotes its own staging dir
+      var winner: DataFrame = null
+      val loser = publish { winner = publish(frame); frame }
+      assert(rows(loser) == rows(winner) && rows(loser).size == 50)
+      val inside = new java.io.File(out).list().toSeq
+      assert(!inside.exists(_.startsWith(".staging-")),
+        s"the loser's staging dir was moved into the artifact: $inside")
+      assert(!new java.io.File(root).list().exists(_.startsWith(".staging-")),
+        "the loser must delete its staging dir")
+    }
+  }
 }
