@@ -1,6 +1,6 @@
 package graft.probe
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
@@ -11,7 +11,7 @@ import graft.{Probe, SparkEntry, Tables}
 import graft.Probe.{Cell, Ctx}
 import graft.obs.Meter
 import graft.queries.{Dedup, TextOps}
-import graft.sources.{StatsWrite, Versioned, ZoneBlooms, ZoneMaps}
+import graft.sources.{StatsWrite, Versioned, ZoneMaps}
 import graft.sources.Versioned.TableSpec
 import graft.streaming.{StreamingLakeAppend, StreamingLakeTakedown}
 
@@ -180,22 +180,12 @@ object LakeCells {
       Versioned.readPrunedAt(spark, base, "lineitem", 1L, "l_orderkey", lo, hi))
     val (pruned2, prunedV2) = probe("pruned_v2_compacted",
       Versioned.readPrunedAt(spark, base, "lineitem", 2L, "l_orderkey", lo, hi))
-    // publish-time stats collection in isolation: re-collect the v2
-    // sidecar (byte-identical content) and time the footer walk —
-    // the r16 distributed-walk claim is that this stays flat-ish as
-    // SPARK_GRAFT_ZONE_FILES grows (one fan-out job, not one
-    // driver-serial footer round-trip per file)
-    val sidecar = c.measure("sidecar_collect_v2") {
-      val (dataDir, _, _) = Versioned.prunedFilesAt(
-        spark, base, "lineitem", 2L, "l_orderkey", lo, hi).get
-      ZoneMaps.writeSidecar(spark, dataDir, Seq("l_orderkey"))
-    }
     require(fullV1 == fullV2 && fullV1 == prunedV1 && fullV1 == prunedV2,
       s"value identity broken: fullV1=$fullV1 fullV2=$fullV2 " +
         s"v1=$prunedV1 v2=$prunedV2")
     c.emit("sf" -> c.sfDir, "range" -> Seq(lo, hi),
       "files_v1" -> Seq(selV1.size, totV1), "files_v2" -> Seq(selV2.size, totV2),
-      full1, full2, pruned1, pruned2, sidecar)
+      full1, full2, pruned1, pruned2)
   }
 
   /** Merge-on-read write amplification, measured: the SAME ~1% upsert
@@ -541,19 +531,16 @@ object LakeCells {
       cell("1x", 1000000L), cell("10x", 10000000L))
   }
 
-  /** Publish-time I/O of stats/bloom-tracked writes. Sidecar builders
-    * that run AFTER the write (a footer walk for min/max, a full column
-    * re-scan per Bloom sidecar) read the table they just wrote (input ≈
-    * table bytes, ×2 total I/O); [[StatsWrite]] emits both sidecars
-    * from the write tasks, so input bytes for the same publish should
-    * be ~zero beyond the source itself.
+  /** Publish-time I/O of stats/bloom-tracked writes. [[StatsWrite]]
+    * emits both sidecars from the write tasks, so input bytes for a
+    * publish should be ~zero beyond the source itself.
     *
     * Measured as the phase's task input bytes on a generated
     * (zero-input) frame, so every byte READ is attributable to sidecar
-    * construction. Cells: write+sidecars via the write-task path vs
-    * the re-scan shape (native write, then the standalone collectors),
-    * at 2M rows — plus the byte identity of the sidecars both paths
-    * produce. */
+    * construction. Cells: flat and partitioned writes at 2M rows, a
+    * hot-keyed partitioned write and its compaction fold. The sidecars'
+    * byte identity with a footer walk and column re-scan is
+    * [[graft.StatsWriteSpec]]'s to pin. */
   private def statsWrite(c: Ctx): Unit = {
     val spark = c.spark
     val statsCols = Seq("k", "amount")
@@ -565,18 +552,6 @@ object LakeCells {
       val (_, u) = Meter.measure(spark)(f)
       out ++= Seq(s"${p}_read_bytes" -> u.inputBytes,
         s"${p}_read_records" -> u.recordsRead, s"${p}_secs" -> Probe.secs(u.wallMs))
-    }
-    def zonemap(dir: String) = Files.readAllBytes(Paths.get(s"$dir/_zonemap.tsv"))
-    /** The write-task sidecar equals what the standalone collector
-      * derives from the same files (StatsWriteSpec's pin). */
-    def sidecarIdentical(key: String, dir: String): Unit = {
-      val written = zonemap(dir)
-      ZoneMaps.writeSidecar(spark, dir, statsCols)
-      out += key -> java.util.Arrays.equals(written, zonemap(dir))
-    }
-    def rescan(dir: String): Unit = {
-      ZoneMaps.writeSidecar(spark, dir, statsCols)
-      ZoneBlooms.writeSidecar(spark, dir, bloomCols)
     }
     /** The hot date's file count, its concurrent write tasks (each
       * final file carries its writing task's index) and largest file. */
@@ -599,10 +574,6 @@ object LakeCells {
       StatsWrite.write(spark, df, s"$root/new", statsCols, bloomCols)
     }
     out += "table_bytes" -> dirBytes(s"$root/new")
-    readPhase("rescan") {
-      df.write.mode("overwrite").option("compression", "zstd").parquet(s"$root/old")
-      rescan(s"$root/old")
-    }
     // partitioned cells (the rolling writer — the ETL charges shape):
     // same frame + a 16-value date partition column
     val dp = df.withColumn("part_date",
@@ -611,13 +582,6 @@ object LakeCells {
       StatsWrite.writePartitioned(spark, dp, s"$root/newp",
         Seq("part_date"), statsCols, bloomCols)
     }
-    readPhase("part_rescan") {
-      dp.repartition(col("part_date")).write.mode("overwrite")
-        .option("compression", "zstd").partitionBy("part_date").parquet(s"$root/oldp")
-      rescan(s"$root/oldp")
-    }
-    sidecarIdentical("part_zonemap_byte_identical", s"$root/newp")
-    sidecarIdentical("zonemap_byte_identical", s"$root/new")
 
     // skew cells: a deliberately HOT-keyed partitioned publish — 90% of
     // rows in ONE date (the reference's charges shape). An unsalted
@@ -633,9 +597,6 @@ object LakeCells {
         Seq("part_date"), statsCols, bloomCols, targetRowsPerFile = 200000L)
     }
     hotLayout("hot", s"$root/hot")
-    // sidecars over the skew-split layout still match the re-scan
-    // byte-for-byte
-    sidecarIdentical("hot_zonemap_byte_identical", s"$root/hot")
 
     // compaction-fold cell: the HOT frame lives in a versioned lake —
     // partition-published, a flat MoR append and a tombstone accrete

@@ -581,7 +581,7 @@ object Relational {
   }
 
   /** File count for the zone-map lake; the `SPARK_GRAFT_ZONE_FILES`
-    * override exists for [[graft.ScaleZone]]'s file-count axis (the
+    * override exists for `graft.Probe zone`'s file-count axis (the
     * 100 TB question is "does scheduling stay ∝ matching files as the
     * file count grows"), and is part of the lake's content key, so
     * differently-sized lakes never collide. Unset ⇒ 8 (the driver's

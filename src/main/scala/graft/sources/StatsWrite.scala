@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,8 +15,16 @@ import org.apache.spark.sql.types._
   * which at 100 TB means re-reading the table you just wrote). This is
   * the design Delta/Iceberg use: per-file stats are computed inside
   * the write job and land in the transaction metadata, never by
-  * re-reading data. [[ZoneMaps.writeSidecar]]/[[ZoneBlooms.writeSidecar]]
-  * remain as the LEGACY/backfill path for dirs written elsewhere.
+  * re-reading data. It is the only writer of both sidecars; the
+  * footer walk and column re-scan that used to build them survive
+  * only in `src/test`, as [[graft.StatsWriteSpec]]'s byte-identity
+  * reference.
+  *
+  * One writer serves both layouts: a flat write is a partitioned
+  * write with no partition columns. [[write]] runs the row loop over
+  * its input as planned (one file per non-empty input partition, no
+  * pre-pass, no shuffle); [[writePartitioned]] first salts, shuffles
+  * and sorts. Both end in the same finalize.
   *
   * Each task writes its partition as one parquet file through Spark's
   * own `ParquetWriteSupport` (full schema fidelity — nested types,
@@ -27,10 +35,9 @@ import org.apache.spark.sql.types._
   * the driver, which renames the files into place, writes both
   * sidecars from the collected parts, and creates `_SUCCESS` last —
   * a crash mid-finalize leaves no `_SUCCESS`, so the publish's
-  * existing loud check aborts the uncommitted dir, same as the legacy
-  * path.
+  * existing loud check aborts the uncommitted dir.
   *
-  * Sidecar byte-identity with the legacy re-scan (pinned by
+  * Sidecar byte-identity with the footer walk and re-scan (pinned by
   * [[graft.StatsWriteSpec]]): bounds fold with the same comparators
   * parquet-mr's statistics use (unsigned bytes for strings, unscaled
   * decimals at declared scale, epoch units for date/timestamp,
@@ -53,10 +60,12 @@ import org.apache.spark.sql.types._
   * only-winners-become-visible property. */
 object StatsWrite {
 
-  /** One written file's contribution, returned by its write task. */
-  private final case class PartResult(idx: Int, tmpName: String,
-      rows: Long, stats: Seq[(String, ZoneMaps.ColStats)],
-      blooms: Seq[(String, ZoneBlooms.SimpleBloom)])
+  /** One written file, returned by its write task: its path under
+    * the temp dir (`dir` is the partition fragment, "" when flat) and
+    * the file's stats and blooms by column. */
+  private final case class Part(dir: String, tmpRel: String,
+      stats: Map[String, ZoneMaps.ColStats],
+      blooms: Map[String, ZoneBlooms.SimpleBloom])
 
   /** Column kind in the zone-map type system; mirrors what
     * [[ZoneMaps]]'s footer walk derives from parquet physical +
@@ -156,18 +165,6 @@ object StatsWrite {
     }
   }
 
-  /** Streaming per-file bloom-hash fold: bounded task memory no matter
-    * how many rows land in one file (r18; previously an
-    * growable in-memory buffer held EVERY row's hash until close — 8 bytes ×
-    * a 10B-row hot partition is task-memory death at 100 TB scale).
-    * Hashes for all bloom columns of one row land interleaved in a
-    * fixed in-memory prefix (64Ki rows); past the prefix they stream
-    * to a LOCAL temp file — the same local-disk posture as Spark's own
-    * shuffle/sort spills, and ~8·cols bytes/row of sequential I/O,
-    * negligible next to the parquet bytes being written. At close the
-    * blooms are sized from the EXACT row count (byte-identical to the
-    * legacy footer-count sizing, which [[graft.StatsWriteSpec]] pins)
-    * and filled from prefix + spill in one sequential replay. */
   /** Scratch dir for spills — the executor's big local volumes, not
     * java.io.tmpdir (often a small root fs). Resolution order, pinned
     * by [[graft.StatsWriteSpec]]: (1) Spark's OWN local-dir machinery
@@ -186,6 +183,18 @@ object StatsWrite {
         .map(new java.io.File(_)).filter(_.isDirectory))
       .getOrElse(new java.io.File(System.getProperty("java.io.tmpdir")))
 
+  /** Streaming per-file bloom-hash fold: bounded task memory no matter
+    * how many rows land in one file (r18; previously an
+    * growable in-memory buffer held EVERY row's hash until close — 8 bytes ×
+    * a 10B-row hot partition is task-memory death at 100 TB scale).
+    * Hashes for all bloom columns of one row land interleaved in a
+    * fixed in-memory prefix (64Ki rows); past the prefix they stream
+    * to a LOCAL temp file — the same local-disk posture as Spark's own
+    * shuffle/sort spills, and ~8·cols bytes/row of sequential I/O,
+    * negligible next to the parquet bytes being written. At close the
+    * blooms are sized from the EXACT row count (byte-identical to the
+    * footer-count sizing of the re-scan, which [[graft.StatsWriteSpec]] pins)
+    * and filled from prefix + spill in one sequential replay. */
   private final class HashSpill(nCols: Int) {
     private val PrefixRows = 1 << 16
     private val prefix = new Array[Long](nCols * PrefixRows)
@@ -255,6 +264,22 @@ object StatsWrite {
     }
   }
 
+  /** Hadoop `Configuration` is Writable, not Java-serializable; this
+    * wrapper ships it into the write tasks. (Spark has an internal
+    * equivalent; this stays on public API only.) */
+  private final class SerConf(
+      @transient var value: org.apache.hadoop.conf.Configuration)
+      extends Serializable {
+    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
+      out.defaultWriteObject(); value.write(out)
+    }
+    private def readObject(in: java.io.ObjectInputStream): Unit = {
+      in.defaultReadObject()
+      value = new org.apache.hadoop.conf.Configuration(false)
+      value.readFields(in)
+    }
+  }
+
   /** The parquet-mr builder over Spark's own row-to-parquet
     * translation — schema and encodings ride the Hadoop conf exactly
     * as in Spark's native write path. */
@@ -268,9 +293,34 @@ object StatsWrite {
       new org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
   }
 
+  /** A zstd parquet writer at `p` of the file schema `conf` carries. */
+  private def openWriter(p: Path, conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.ParquetWriter[InternalRow] =
+    new RowWriterBuilder(
+        org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(p, conf))
+      .withConf(conf)
+      .withCompressionCodec(
+        org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD)
+      .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+
   /** Internal salt column appended for skewed partition values; never
     * reaches a data file or a dir name. */
   private val SaltCol = "__graft_salt"
+
+  /** Write `df` to `dst` (Overwrite semantics) with write-time sidecar
+    * emission for `statsCols` (zone maps) and `bloomCols` (per-file
+    * blooms): zstd parquet files, `_SUCCESS` last, sidecars inside the
+    * dir. The input plan is written as it stands: one job, no pre-pass,
+    * no shuffle, one file per non-empty input partition. An empty frame
+    * leaves one zero-row file that carries the schema, as Spark's own
+    * writer does, and header-only bloom sidecars; a zone map over it
+    * refuses loudly, since no file carries statistics. */
+  def write(spark: SparkSession, df: DataFrame, dst: String,
+      statsCols: Seq[String], bloomCols: Seq[String]): Unit = {
+    validate(spark, df.schema, Nil, statsCols, bloomCols)
+    writeParts(spark, df, dst, Nil, statsCols, bloomCols, Long.MaxValue)
+  }
 
   /** Partitioned sibling of [[write]] (r17): the `partitionBy` layout
     * (`col=value` dirs, partition columns dir-encoded and EXCLUDED
@@ -310,45 +360,15 @@ object StatsWrite {
     * layout is known cold. The salt hash covers only hashable data
     * column types (Spark's hash expressions reject maps); rows
     * identical in every hashable column share a bucket, and the hard
-    * in-run roll backstops the reduced diversity. */
+    * in-run roll backstops the reduced diversity. An empty frame
+    * refuses: it has no partition value to write. */
   def writePartitioned(spark: SparkSession, df: DataFrame, dst: String,
       partitionBy: Seq[String], statsCols: Seq[String],
-      bloomCols: Seq[String], bitsPerRow: Int = 10,
-      targetRowsPerFile: Long = 1L << 20): Unit = {
+      bloomCols: Seq[String], targetRowsPerFile: Long = 1L << 20): Unit = {
     require(partitionBy.nonEmpty, "writePartitioned needs partition columns")
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
     val schema = df.schema
-    require(!schema.fieldNames.contains(SaltCol),
-      s"column name '$SaltCol' is reserved")
-    partitionBy.foreach(c => require(schema.fieldNames.contains(c),
-      s"partition column '$c' not in schema"))
-    (statsCols ++ bloomCols).foreach { c =>
-      require(schema.fieldNames.contains(c),
-        s"tracked column '$c' not in schema " +
-          s"(${schema.fieldNames.mkString(",")})")
-      require(!partitionBy.contains(c),
-        s"tracked column '$c' is a partition column — dir-encoded, " +
-          "use partition pruning instead")
-    }
-    bloomCols.foreach { c =>
-      val ok = schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType | StringType |
-             DateType => true
-        case _: DecimalType => true
-        case _ => false
-      }
-      require(ok, s"bloom column '$c' has unsupported type " +
-        s"${schema(c).dataType}")
-    }
-    partitionBy.foreach { c =>
-      val ok = schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType | StringType |
-             DateType => true
-        case _ => false
-      }
-      require(ok, s"unsupported partition value type for '$c': " +
-        s"${schema(c).dataType}")
-    }
+    validate(spark, schema, partitionBy, statsCols, bloomCols)
     import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
     val pcols = partitionBy.map(col)
     val dataCols = schema.fieldNames.filterNot(partitionBy.contains).toSeq
@@ -426,160 +446,187 @@ object StatsWrite {
           spark.sessionState.conf.numShufflePartitions, shuffleCols: _*)
       else salted.repartition(shuffleCols: _*))
       .sortWithinPartitions(shuffleCols: _*)
-    val schema2 = sorted.schema
-    val partOrds = partitionBy.map(schema2.fieldIndex).toArray
-    val boundaryOrds =
-      if (withSalt) partOrds :+ schema2.fieldIndex(SaltCol) else partOrds
-    val dataIdx = schema2.fields.indices
-      .filterNot(i => partOrds.contains(i) ||
-        schema2.fields(i).name == SaltCol).toArray
-    val dataSchema = StructType(dataIdx.map(schema2.fields))
-    writeRolling(spark, sorted, dst, schema2, dataSchema, dataIdx, partOrds,
-      boundaryOrds, statsCols, bloomCols, bitsPerRow, targetRowsPerFile)
+    writeParts(spark, sorted, dst,
+      if (withSalt) partitionBy :+ SaltCol else partitionBy,
+      statsCols, bloomCols, targetRowsPerFile)
   }
 
-  private final case class PartEntry(partDir: String, tmpName: String,
-      rows: Long, stats: Seq[(String, ZoneMaps.ColStats)],
-      blooms: Seq[(String, ZoneBlooms.SimpleBloom)])
-  private final case class PartFiles(idx: Int, entries: Seq[PartEntry])
-
-  /** The rolling-writer job behind [[writePartitioned]]: each task
-    * walks its boundary-sorted rows, rolling to a new file (and a
-    * fresh stats/bloom fold) at every (partition value, salt) boundary
-    * and at `maxRowsPerFile` within a run; partition columns (and the
-    * salt) are dir-encoded / dropped and projected OUT of the file
-    * rows. */
-  private def writeRolling(spark: SparkSession,
-      sorted: org.apache.spark.sql.DataFrame, dst: String,
-      schema: StructType, dataSchema: StructType, dataIdx: Array[Int],
-      partOrds: Array[Int], boundaryOrds: Array[Int],
-      statsCols: Seq[String], bloomCols: Seq[String],
-      bitsPerRow: Int, maxRowsPerFile: Long): Unit = {
-    val conf = writerConf(spark, dataSchema)
-    val tsKind = spark.conf.get(
-        "spark.sql.parquet.outputTimestampType", "INT96") match {
+  /** The session's parquet timestamp encoding as a zone-map kind:
+    * INT96 carries no usable statistics, so the footer says U. */
+  private def tsKind(spark: SparkSession): String =
+    spark.conf.get("spark.sql.parquet.outputTimestampType", "INT96") match {
       case "TIMESTAMP_MICROS" => "tsmicros"
       case "TIMESTAMP_MILLIS" => "tsmillis"
       case _ => "opaque"
     }
+
+  /** The checks both writers run before any job: tracked columns are
+    * data columns of the frame, bloom columns are of a type
+    * [[ZoneBlooms.hashValue]] covers, partition values dir-encodable. */
+  private def validate(spark: SparkSession, schema: StructType,
+      partitionBy: Seq[String], statsCols: Seq[String],
+      bloomCols: Seq[String]): Unit = {
+    require(statsCols.nonEmpty || bloomCols.nonEmpty,
+      "StatsWrite without tracked columns — use df.write")
+    val fields = schema.fieldNames
+    require(!fields.contains(SaltCol), s"column name '$SaltCol' is reserved")
+    partitionBy.foreach(c => require(fields.contains(c),
+      s"partition column '$c' not in schema"))
+    (statsCols ++ bloomCols).foreach { c =>
+      require(fields.contains(c),
+        s"tracked column '$c' not in schema (${fields.mkString(",")}) — " +
+          "misspelled, or a partition column (dir-encoded, use partition " +
+          "pruning instead)")
+      require(!partitionBy.contains(c),
+        s"tracked column '$c' is a partition column — dir-encoded, " +
+          "use partition pruning instead")
+    }
+    def keyType(dt: DataType, decimalOk: Boolean): Boolean = dt match {
+      case ByteType | ShortType | IntegerType | LongType | StringType |
+           DateType => true
+      case _: DecimalType => decimalOk
+      case _ => false
+    }
+    bloomCols.foreach(c => require(keyType(schema(c).dataType, true),
+      s"bloom column '$c' has unsupported type ${schema(c).dataType}"))
+    partitionBy.foreach(c => require(keyType(schema(c).dataType, false),
+      s"unsupported partition value type for '$c': ${schema(c).dataType}"))
+    // a present-but-opaque column (boolean, INT96 timestamp) writes U
+    // rows, as the footer does; only the timestamp is worth a warning
+    if (tsKind(spark) == "opaque")
+      statsCols.filter(c => schema(c).dataType == TimestampType).foreach { c =>
+        System.err.println(s"LAKE WARN: zone-map column '$c' is an INT96 " +
+          "timestamp — no usable statistics; set " +
+          "spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS")
+      }
+  }
+
+  /** The one row loop and finalize behind [[write]] and
+    * [[writePartitioned]]. `boundary` (the partition columns, plus the
+    * salt when present) marks runs in `rows`: a task rolls to a new
+    * file, with a fresh stats/bloom fold, at every change of its
+    * boundary values and at `maxRowsPerFile` within a run. Boundary
+    * columns are dir-encoded or dropped, never written; with none, a
+    * task writes its rows as they come into one file. */
+  private def writeParts(spark: SparkSession, rows: DataFrame, dst: String,
+      boundary: Seq[String], statsCols: Seq[String], bloomCols: Seq[String],
+      maxRowsPerFile: Long): Unit = {
+    val schema = rows.schema
+    val partitionBy = boundary.filterNot(_ == SaltCol)
+    val boundaryOrds = boundary.map(schema.fieldIndex).toArray
+    val dataIdx = schema.fields.indices.filterNot(boundaryOrds.contains).toArray
+    val conf = writerConf(spark, StructType(dataIdx.map(schema.fields)))
     val dstPath = new Path(dst)
     val f = dstPath.getFileSystem(conf)
-    if (f.exists(dstPath)) f.delete(dstPath, true)
+    if (f.exists(dstPath)) f.delete(dstPath, true) // SaveMode.Overwrite
     f.mkdirs(dstPath)
     val jobId = java.util.UUID.randomUUID().toString
     val tmp = new Path(dstPath, s"_tmp-$jobId")
     f.mkdirs(tmp)
 
-    val ser = new ZoneMaps.SerConf(conf)
+    val ser = new SerConf(conf)
     val tmpStr = tmp.toString
-    val statsV = statsCols.toVector
-    val bloomsV = bloomCols.toVector
-    val statsOrds = statsV.map(c =>
-      (c, schema.fieldIndex(c), kindOf(schema(c).dataType, tsKind)))
-    val bloomOrds = bloomsV.map(c => (c, schema.fieldIndex(c)))
+    val ts = tsKind(spark)
+    val statsOrds = statsCols.toArray.map(c =>
+      (c, schema.fieldIndex(c), kindOf(schema(c).dataType, ts)))
+    val bloomNames = bloomCols.toArray
+    val bloomOrds = bloomNames.map(schema.fieldIndex)
     val dts = schema.fields.map(_.dataType)
-    val partMeta = partOrds.map(i =>
-      (schema.fields(i).name, schema.fields(i).dataType, i))
-    val boundaryMeta = boundaryOrds.map(i => (schema.fields(i).dataType, i))
-    val dataIdxV = dataIdx
-    val bpr = bitsPerRow
+    val partMeta = partitionBy.map(c =>
+      (c, schema(c).dataType, schema.fieldIndex(c))).toArray
+    val boundaryMeta = boundaryOrds.map(i => (dts(i), i))
     val maxRows = maxRowsPerFile
 
-    val results = sorted.queryExecution.toRdd.mapPartitionsWithIndex {
-      (i, rows) =>
-        if (!rows.hasNext) Iterator.empty
+    val results = rows.queryExecution.toRdd.mapPartitionsWithIndex {
+      (i, it) =>
+        if (!it.hasNext) Iterator.empty
         else {
           val taskConf = ser.value
           val attempt = Option(TaskContext.get()).map(_.taskAttemptId())
             .getOrElse(0L)
-          val proj = org.apache.spark.sql.catalyst.expressions
-            .UnsafeProjection.create(
-              dataIdxV.toIndexedSeq.map(j =>
+          val proj =
+            if (boundaryOrds.isEmpty) null
+            else org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+              .create(dataIdx.toIndexedSeq.map(j =>
                 org.apache.spark.sql.catalyst.expressions.BoundReference(
                   j, dts(j), schema.fields(j).nullable)))
-          val entries = Vector.newBuilder[PartEntry]
+          val parts = Vector.newBuilder[Part]
           var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = null
-          var accs: Vector[ColAcc] = Vector.empty
+          var accs: Array[ColAcc] = Array.empty
+          // bloom sizing needs the file's row count, known only at its
+          // end — the spill fold stages hashes in bounded memory and
+          // replays them into the exactly-sized filter at close
           var fold: HashSpill = null
           var n = 0L
           var curKey: Seq[Any] = null
-          var curDir: String = null
-          var curName: String = null
+          var curDir = ""
+          var curRel: String = null
           var k = 0
           def closeFile(): Unit = if (writer != null) {
             writer.close()
-            val blooms =
-              if (bloomOrds.isEmpty) Vector.empty[(String, ZoneBlooms.SimpleBloom)]
-              else {
-                val bs = bloomOrds.map { case (c, _) =>
-                  c -> ZoneBlooms.bloomFor(n, bpr) }
-                fold.fill(bs.map(_._2))
-                fold = null
-                bs
-              }
-            entries += PartEntry(curDir, curName, n,
-              accs.map(a => a.name -> a.result), blooms)
             writer = null
+            val blooms = bloomNames.map(c => c -> ZoneBlooms.bloomFor(n))
+            if (fold != null) {
+              fold.fill(blooms.map(_._2).toIndexedSeq)
+              fold = null
+            }
+            parts += Part(curDir, curRel,
+              accs.map(a => a.name -> a.result).toMap, blooms.toMap)
           }
           def openFile(dir: String): Unit = {
-            curDir = dir
-            curName = f"part-$i%05d-$k%04d-a$attempt.zstd.parquet"
+            val name = f"part-$i%05d-$k%04d-a$attempt.zstd.parquet"
             k += 1
-            val p = new Path(new Path(tmpStr, dir), curName)
-            writer = new RowWriterBuilder(
-                org.apache.parquet.hadoop.util.HadoopOutputFile
-                  .fromPath(p, taskConf))
-              .withConf(taskConf)
-              .withCompressionCodec(
-                org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD)
-              .withWriteMode(
-                org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
-              .build()
-            accs = statsOrds.map { case (c, ord, kind) =>
-              new ColAcc(c, ord, kind) }.toVector
+            curDir = dir
+            curRel = if (dir.isEmpty) name else s"$dir/$name"
+            writer = openWriter(new Path(tmpStr, curRel), taskConf)
+            accs = statsOrds.map { case (c, ord, kind) => new ColAcc(c, ord, kind) }
             if (bloomOrds.nonEmpty) fold = new HashSpill(bloomOrds.length)
             n = 0L
           }
           try {
-            while (rows.hasNext) {
-              val row = rows.next()
-              // stable copies of the boundary values (partition cols +
-              // salt) for run detection (UnsafeRow buffers are reused)
-              val key: Seq[Any] = boundaryMeta.toIndexedSeq.map {
-                case (dt, o) =>
-                  if (row.isNullAt(o)) null
-                  else dt match {
-                    case StringType => row.getUTF8String(o).toString
-                    case _ => row.get(o, dt)
-                  }
+            while (it.hasNext) {
+              val row = it.next()
+              if (proj != null) {
+                // stable copies of the boundary values (partition cols +
+                // salt) for run detection (UnsafeRow buffers are reused)
+                val key: Seq[Any] = boundaryMeta.toIndexedSeq.map {
+                  case (dt, o) =>
+                    if (row.isNullAt(o)) null
+                    else dt match {
+                      case StringType => row.getUTF8String(o).toString
+                      case _ => row.get(o, dt)
+                    }
+                }
+                if (key != curKey) {
+                  closeFile()
+                  curKey = key
+                  openFile(partMeta.toIndexedSeq.map { case (nm, dt, o) =>
+                    partFragment(nm, dt,
+                      if (row.isNullAt(o)) null else row.get(o, dt))
+                  }.mkString("/"))
+                }
               }
-              if (curKey == null || key != curKey) {
-                closeFile()
-                curKey = key
-                openFile(partMeta.toIndexedSeq.map { case (nm, dt, o) =>
-                  partFragment(nm, dt,
-                    if (row.isNullAt(o)) null else row.get(o, dt))
-                }.mkString("/"))
-              } else if (n >= maxRows) {
+              if (writer == null) openFile("")
+              else if (n >= maxRows) {
                 // hard in-run roll: backstops salt-hash imbalance and
                 // stale pre-pass counts — same dir, next file ordinal
                 val d = curDir
                 closeFile()
                 openFile(d)
               }
-              writer.write(proj(row))
+              writer.write(if (proj == null) row else proj(row))
               var j = 0
               while (j < accs.length) {
                 accs(j).update(row, dts(accs(j).ord)); j += 1
               }
               j = 0
               while (j < bloomOrds.length) {
-                val ord = bloomOrds(j)._2
+                val ord = bloomOrds(j)
                 fold.set(j, ZoneBlooms.hashInternal(
                   if (row.isNullAt(ord)) null else row.get(ord, dts(ord))))
                 j += 1
               }
-              if (bloomOrds.nonEmpty) fold.endRow()
+              if (fold != null) fold.endRow()
               n += 1
             }
             closeFile()
@@ -587,57 +634,40 @@ object StatsWrite {
             if (writer != null) writer.close()
             if (fold != null) fold.close()
           }
-          Iterator.single(PartFiles(i, entries.result()))
+          Iterator.single(i -> parts.result())
         }
     }.collect()
 
-    if (results.isEmpty) {
-      // empty frame: mirror the legacy path exactly (salt dropped —
-      // it must never reach a data file)
-      f.delete(tmp, true)
-      val partCols = partMeta.map(_._1).toSeq
-      sorted.drop(SaltCol).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .partitionBy(partCols: _*).parquet(dst)
-      if (statsCols.nonEmpty) ZoneMaps.writeSidecar(spark, dst, statsCols)
-      if (bloomCols.nonEmpty) ZoneBlooms.writeSidecar(spark, dst, bloomCols)
-      return
-    }
-
-    val finals = results.sortBy(_.idx).flatMap { r =>
-      r.entries.zipWithIndex.map { case (e, j) =>
-        val fin = f"part-${r.idx}%05d-$j%04d-$jobId.zstd.parquet"
-        val dir = new Path(dstPath, e.partDir)
-        f.mkdirs(dir)
-        val ok = f.rename(new Path(new Path(tmp, e.partDir), e.tmpName),
-          new Path(dir, fin))
-        require(ok, s"StatsWrite: rename of ${e.partDir}/${e.tmpName} failed")
-        e -> s"${e.partDir}/$fin"
+    // finalize: deterministic final names in partition order, sorted
+    // by path as the footer walk lists them, then the sidecars, then
+    // _SUCCESS last — a crash before it leaves a dir publish refuses
+    val finals = results.sortBy(_._1).toSeq.flatMap { case (i, parts) =>
+      parts.zipWithIndex.map { case (p, j) =>
+        val fin = f"part-$i%05d-$j%04d-$jobId.zstd.parquet"
+        val rel = if (p.dir.isEmpty) fin else s"${p.dir}/$fin"
+        val to = new Path(dstPath, rel)
+        if (p.dir.nonEmpty) f.mkdirs(to.getParent)
+        require(f.rename(new Path(tmp, p.tmpRel), to),
+          s"StatsWrite: rename of ${p.tmpRel} failed under $dst")
+        rel -> p
       }
-    }.sortBy(_._2) // deterministic sidecar order = sorted path order
+    }.sortBy(_._1)
     f.delete(tmp, true)
-    if (statsCols.nonEmpty) {
-      val sb = new StringBuilder("graft-zonemap\tv1\n")
-      finals.foreach { case (e, rel0) =>
-        val byCol = e.stats.toMap
-        val rel = f.makeQualified(new Path(dstPath, rel0)).toString
-          .stripPrefix(dst).stripPrefix("/")
-        statsV.foreach { c =>
-          val cs = byCol(c)
-          sb.append(rel).append('\t').append(c).append('\t')
-            .append(cs.tpe).append('\t').append(cs.flag).append('\t')
-            .append(cs.min).append('\t').append(cs.max).append('\n')
-        }
-      }
-      val out = f.create(new Path(dstPath, ZoneMaps.SidecarName), true)
-      try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
+    if (finals.isEmpty) {
+      // an empty frame: no task wrote a file
+      require(statsCols.isEmpty, "zone map over an empty frame: no file " +
+        s"under $dst carries statistics for ${statsCols.mkString(",")}")
+      require(partitionBy.isEmpty, "StatsWrite.writePartitioned over an " +
+        s"empty frame: no partition value to write under $dst")
+      openWriter(new Path(dstPath, f"part-00000-0000-$jobId.zstd.parquet"),
+        conf).close()
     }
-    bloomsV.foreach { c =>
-      ZoneBlooms.writeSidecarFromParts(f, dstPath, c,
-        finals.map { case (e, rel) => rel -> e.blooms.toMap.apply(c) }.toSeq)
-    }
-    val s = f.create(new Path(dstPath, "_SUCCESS"), true)
-    s.close()
+    if (statsCols.nonEmpty)
+      ZoneMaps.writeSidecarFromParts(f, dstPath, statsCols,
+        finals.map { case (rel, p) => ZoneMaps.FileStats(rel, p.stats) })
+    bloomCols.foreach(c => ZoneBlooms.writeSidecarFromParts(f, dstPath, c,
+      finals.map { case (rel, p) => rel -> p.blooms(c) }))
+    f.create(new Path(dstPath, "_SUCCESS"), true).close()
   }
 
   /** The Hadoop conf a task-side ParquetWriteSupport needs: the SQL
@@ -676,175 +706,5 @@ object StatsWrite {
       }
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .getPartitionPathString(name, s)
-  }
-
-  /** Write `df` to `dst` (Overwrite semantics) with write-time sidecar
-    * emission for `statsCols` (zone maps) and `bloomCols` (per-file
-    * blooms). Produces the same layout contract as
-    * `df.write.parquet(dst)` + the legacy sidecar writers: zstd
-    * parquet files, `_SUCCESS` last, sidecars inside the dir. */
-  def write(spark: SparkSession, df: DataFrame, dst: String,
-      statsCols: Seq[String], bloomCols: Seq[String],
-      bitsPerRow: Int = 10): Unit = {
-    require(statsCols.nonEmpty || bloomCols.nonEmpty,
-      "StatsWrite.write without tracked columns — use df.write")
-    val schema = df.schema
-    val fields = schema.fieldNames
-    (statsCols ++ bloomCols).foreach(c => require(fields.contains(c),
-      s"tracked column '$c' not in schema (${fields.mkString(",")}) — " +
-        "misspelled, or a partition column (dir-encoded, use partition " +
-        "pruning instead)"))
-    // bloom support mirrors ZoneBlooms.hashValue's domain — fail at
-    // write time, loudly, like the legacy path does
-    bloomCols.foreach { c =>
-      val dt = schema(c).dataType
-      val ok = dt match {
-        case ByteType | ShortType | IntegerType | LongType | StringType |
-             DateType => true
-        case _: DecimalType => true
-        case _ => false
-      }
-      require(ok, s"bloom column '$c' has unsupported type $dt")
-    }
-    val tsKind = spark.conf.get(
-        "spark.sql.parquet.outputTimestampType", "INT96") match {
-      case "TIMESTAMP_MICROS" => "tsmicros"
-      case "TIMESTAMP_MILLIS" => "tsmillis"
-      case _ => "opaque" // INT96 carries no usable stats — footer says U
-    }
-    statsCols.foreach { c =>
-      // the legacy path fails when a column can never prune only if it
-      // is absent from footers; a present-but-opaque column (boolean,
-      // INT96 timestamp) writes U rows there, so it does here too
-      val k = kindOf(schema(c).dataType, tsKind)
-      if ((schema(c).dataType == TimestampType ||
-          schema(c).dataType == TimestampNTZType) && k == "opaque")
-        System.err.println(s"LAKE WARN: zone-map column '$c' is an INT96 " +
-          "timestamp — no usable statistics; set " +
-          "spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS")
-    }
-
-    val conf = writerConf(spark, schema)
-
-    val dstPath = new Path(dst)
-    val f = dstPath.getFileSystem(conf)
-    if (f.exists(dstPath)) f.delete(dstPath, true) // SaveMode.Overwrite
-    f.mkdirs(dstPath)
-    val jobId = java.util.UUID.randomUUID().toString
-    val tmp = new Path(dstPath, s"_tmp-$jobId")
-    f.mkdirs(tmp)
-
-    val ser = new ZoneMaps.SerConf(conf)
-    val tmpStr = tmp.toString
-    val statsV = statsCols.toVector
-    val bloomsV = bloomCols.toVector
-    val statsOrds = statsV.map(c =>
-      (c, schema.fieldIndex(c), kindOf(schema(c).dataType, tsKind)))
-    val bloomOrds = bloomsV.map(c => (c, schema.fieldIndex(c)))
-    val dts = schema.fields.map(_.dataType)
-    val bpr = bitsPerRow
-
-    val results = df.queryExecution.toRdd.mapPartitionsWithIndex { (i, rows) =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val taskConf = ser.value
-        val attempt = Option(TaskContext.get()).map(_.taskAttemptId())
-          .getOrElse(0L)
-        val name = f"part-$i%05d-a$attempt.zstd.parquet"
-        val p = new Path(tmpStr, name)
-        val writer = new RowWriterBuilder(
-            org.apache.parquet.hadoop.util.HadoopOutputFile
-              .fromPath(p, taskConf))
-          .withConf(taskConf)
-          .withCompressionCodec(
-            org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD)
-          .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
-          .build()
-        val accs = statsOrds.map { case (c, ord, kind) =>
-          new ColAcc(c, ord, kind) }
-        // bloom sizing needs the file's row count, known only at the
-        // end — the spill fold stages hashes in bounded memory and
-        // replays them into the exactly-sized filter after the loop
-        val fold =
-          if (bloomOrds.isEmpty) null else new HashSpill(bloomOrds.length)
-        var n = 0L
-        try {
-          try {
-            while (rows.hasNext) {
-              val row = rows.next()
-              writer.write(row)
-              var j = 0
-              while (j < accs.length) {
-                accs(j).update(row, dts(accs(j).ord)); j += 1
-              }
-              j = 0
-              while (j < bloomOrds.length) {
-                val ord = bloomOrds(j)._2
-                fold.set(j, ZoneBlooms.hashInternal(
-                  if (row.isNullAt(ord)) null else row.get(ord, dts(ord))))
-                j += 1
-              }
-              if (fold != null) fold.endRow()
-              n += 1
-            }
-          } finally writer.close()
-          val blooms = bloomOrds.map { case (c, _) =>
-            c -> ZoneBlooms.bloomFor(n, bpr) }
-          if (fold != null) fold.fill(blooms.map(_._2))
-          Iterator.single(PartResult(i, name, n,
-            accs.map(a => a.name -> a.result), blooms))
-        } finally if (fold != null) fold.close()
-      }
-    }.collect()
-
-    if (results.isEmpty) {
-      // an empty frame: no tasks wrote, so mirror the legacy path
-      // exactly — an empty native write, then the legacy sidecar
-      // writers (which fail loudly for stats over no footers, the
-      // same contract publishes rely on)
-      f.delete(tmp, true)
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(dst)
-      if (statsCols.nonEmpty) ZoneMaps.writeSidecar(spark, dst, statsCols)
-      if (bloomCols.nonEmpty) ZoneBlooms.writeSidecar(spark, dst, bloomCols)
-      return
-    }
-
-    // finalize: deterministic final names in partition order (sorted
-    // name order == partition order, matching the legacy footer walk's
-    // listing order), then sidecars, then _SUCCESS — loud-abort safe
-    val sorted = results.sortBy(_.idx)
-    val finals = sorted.map { r =>
-      val fin = f"part-${r.idx}%05d-$jobId.zstd.parquet"
-      val ok = f.rename(new Path(tmp, r.tmpName), new Path(dstPath, fin))
-      require(ok, s"StatsWrite: rename of ${r.tmpName} failed under $dst")
-      r -> fin
-    }
-    f.delete(tmp, true)
-    if (statsCols.nonEmpty) {
-      val sb = new StringBuilder("graft-zonemap\tv1\n")
-      finals.foreach { case (r, fin) =>
-        val byCol = r.stats.toMap
-        // rel exactly as the legacy footer walk derives it: the
-        // scheme-QUALIFIED listing path minus the dir string as given
-        // (byte-identity includes the path spelling)
-        val rel = f.makeQualified(new Path(dstPath, fin)).toString
-          .stripPrefix(dst).stripPrefix("/")
-        statsV.foreach { c =>
-          val cs = byCol(c)
-          sb.append(rel).append('\t').append(c).append('\t')
-            .append(cs.tpe).append('\t').append(cs.flag).append('\t')
-            .append(cs.min).append('\t').append(cs.max).append('\n')
-        }
-      }
-      val out = f.create(new Path(dstPath, ZoneMaps.SidecarName), true)
-      try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
-    }
-    bloomsV.foreach { c =>
-      ZoneBlooms.writeSidecarFromParts(f, dstPath, c,
-        finals.map { case (r, fin) => fin -> r.blooms.toMap.apply(c) }.toSeq)
-    }
-    val s = f.create(new Path(dstPath, "_SUCCESS"), true)
-    s.close()
   }
 }

@@ -106,16 +106,15 @@ object Versioned {
   /** One table in a publish: the frame plus its physical layout.
     * `partitionBy` gives facts a Hive-partitioned layout inside the
     * version (`part_date=YYYY-MM-DD/` dirs prune date predicates).
-    * `statsCols` declares zone-map columns: the publish distills the
-    * written files' parquet footer min/max into a [[ZoneMaps]] sidecar
-    * inside the data dir, enabling manifest-level file skipping via
+    * `statsCols` declares zone-map columns: the write tasks fold each
+    * file's min/max into a [[ZoneMaps]] sidecar inside the data dir,
+    * enabling manifest-level file skipping via
     * [[Versioned.readPruned]]. Must be DATA columns — naming a
-    * partition column (dir-encoded, absent from footers) fails the
+    * partition column (dir-encoded, absent from the files) fails the
     * publish loudly. `bloomCols` declares point-probe key columns: the
-    * publish builds per-file [[ZoneBlooms]] (one extra scan of the
-    * written dir — blooms need data, not footers), enabling file
-    * skipping for `col = value` reads via [[Versioned.readPoint]] on
-    * ANY layout, sorted or not. */
+    * write tasks build per-file [[ZoneBlooms]] as they write, enabling
+    * file skipping for `col = value` reads via [[Versioned.readPoint]]
+    * on ANY layout, sorted or not. */
   final case class TableSpec(name: String, df: DataFrame,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
@@ -1124,8 +1123,8 @@ object Versioned {
       }
       val dataEntry = append.map { df =>
         val rel = dataDirName(table, next)
-        writeDataDir(spark, df, new Path(b, rel).toString,
-          appendStats, appendBlooms)
+        writeDataDir(spark, TableSpec(table, df, statsCols = appendStats,
+          bloomCols = appendBlooms), new Path(b, rel).toString)
         checkSuccess(f, b, table, rel)
         RefEntry('d', rel)
       }
@@ -1210,18 +1209,26 @@ object Versioned {
       if (f.exists(p)) f.delete(p, false)
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Write one flat data dir: with tracked columns the write tasks
-    * emit the zone-map/bloom sidecars as they write ([[StatsWrite]] —
-    * publish-time I/O ∝ bytes written ×1); without, the plain native
-    * write. Partitioned layouts ride [[StatsWrite.writePartitioned]]
-    * when tracked (see the publish body); the legacy collectors
-    * remain for backfilling dirs written elsewhere. */
-  private def writeDataDir(spark: SparkSession, df: DataFrame, dst: String,
-      statsCols: Seq[String], bloomCols: Seq[String]): Unit =
-    if (statsCols.isEmpty && bloomCols.isEmpty)
-      df.write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(dst)
-    else StatsWrite.write(spark, df, dst, statsCols, bloomCols)
+  /** Write one table's data dir: the one place that picks the writer.
+    * With tracked columns the write tasks emit the zone-map/bloom
+    * sidecars as they write ([[StatsWrite]] — publish-time I/O ∝ bytes
+    * written ×1, flat or partitioned); without, the native writer, one
+    * writer set per partition dir when partitioned (no small files). */
+  private def writeDataDir(spark: SparkSession, t: TableSpec,
+      dst: String): Unit =
+    if (t.statsCols.nonEmpty || t.bloomCols.nonEmpty) {
+      if (t.partitionBy.isEmpty)
+        StatsWrite.write(spark, t.df, dst, t.statsCols, t.bloomCols)
+      else StatsWrite.writePartitioned(spark, t.df, dst, t.partitionBy,
+        t.statsCols, t.bloomCols, t.targetRowsPerFile)
+    } else {
+      val w =
+        if (t.partitionBy.isEmpty) t.df.write
+        else t.df.repartition(t.partitionBy.map(
+            org.apache.spark.sql.functions.col): _*)
+          .write.partitionBy(t.partitionBy: _*)
+      w.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(dst)
+    }
 
   private def checkSuccess(f: FileSystem, b: Path, table: String,
       rel: String): Unit = {
@@ -1285,7 +1292,7 @@ object Versioned {
     * rewrite keeps the dir layout AND inherits the salt discipline —
     * a hot partition value in the FOLDED table still writes from
     * multiple concurrent tasks into `targetRowsPerFile`-bounded files
-    * ([[graft.ScaleStatsWrite]] probes this composition; judge
+    * (`graft.Probe stats-write` probes this composition; judge
     * directive #7, r18). Tracked stats/bloom columns carry over minus
     * any that became partition columns (dir-encoded — the publish
     * would reject them). Auto-compaction keeps its flat
@@ -1368,9 +1375,10 @@ object Versioned {
         else merged.repartitionByRange(files, sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
       val rel = dataDirName(table, next)
-      writeDataDir(spark, frame, new Path(b, rel).toString,
-        statCols.filter(frame.columns.contains(_)),
-        bloomCols.filter(frame.columns.contains(_)))
+      writeDataDir(spark, TableSpec(table, frame,
+        statsCols = statCols.filter(frame.columns.contains(_)),
+        bloomCols = bloomCols.filter(frame.columns.contains(_))),
+        new Path(b, rel).toString)
       checkSuccess(f, b, table, rel)
       f.mkdirs(versionDir(b, next))
       writeEntries(f, b, next, table, prefix :+ RefEntry('d', rel))
@@ -1464,9 +1472,10 @@ object Versioned {
           else folded.repartitionByRange(files, sortBy.map(col): _*)
             .sortWithinPartitions(sortBy.map(col): _*)
         val rel = dataDirName(table, next)
-        writeDataDir(spark, frame, new Path(b, rel).toString,
-          statCols.filter(frame.columns.contains(_)),
-          bloomCols.filter(frame.columns.contains(_)))
+        writeDataDir(spark, TableSpec(table, frame,
+          statsCols = statCols.filter(frame.columns.contains(_)),
+          bloomCols = bloomCols.filter(frame.columns.contains(_))),
+          new Path(b, rel).toString)
         checkSuccess(f, b, table, rel)
         RefEntry('d', rel)
       }
@@ -1651,9 +1660,9 @@ object Versioned {
         .sortWithinPartitions(col(z))
         .drop(z)
       val rel = dataDirName(table, next)
-      writeDataDir(spark, frame, new Path(b, rel).toString,
-        (bounds.cols ++ statCols).distinct
-          .filter(merged.columns.contains(_)), Nil)
+      writeDataDir(spark, TableSpec(table, frame,
+        statsCols = (bounds.cols ++ statCols).distinct
+          .filter(merged.columns.contains(_))), new Path(b, rel).toString)
       checkSuccess(f, b, table, rel)
       f.mkdirs(versionDir(b, next))
       writeEntries(f, b, next, table, prefix :+ RefEntry('d', rel))
@@ -1697,23 +1706,7 @@ object Versioned {
         TableSpec(t, readAt(spark, b.toString, t, cur))
       }
       writes.foreach { t =>
-        val dst = new Path(b, dataDirName(t.name, next)).toString
-        if (t.partitionBy.isEmpty)
-          // stats/bloom sidecars for flat layouts are emitted BY the
-          // write tasks (StatsWrite, r17) — one input pass, never a
-          // re-scan of the dir just written
-          writeDataDir(spark, t.df, dst, t.statsCols, t.bloomCols)
-        else if (t.statsCols.nonEmpty || t.bloomCols.nonEmpty)
-          // tracked partitioned layouts: the rolling write-task path
-          // (one file per partition value, sidecars emitted in the
-          // write loop — I/O ×1, same as flat)
-          StatsWrite.writePartitioned(spark, t.df, dst,
-            t.partitionBy, t.statsCols, t.bloomCols,
-            targetRowsPerFile = t.targetRowsPerFile)
-        else t.df // one writer set per partition dir (no small files)
-          .repartition(t.partitionBy.map(org.apache.spark.sql.functions.col): _*)
-          .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-          .partitionBy(t.partitionBy: _*).parquet(dst)
+        writeDataDir(spark, t, new Path(b, dataDirName(t.name, next)).toString)
       }
       writes.foreach(t => checkSuccess(f, b, t.name, dataDirName(t.name, next)))
       // MANIFEST: refs for fresh writes point at this version's data

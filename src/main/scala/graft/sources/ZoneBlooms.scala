@@ -25,21 +25,18 @@ import org.apache.spark.sql.SparkSession
   * negatives by construction, so a skipped file provably lacks the
   * key.
   *
-  * Build cost, stated honestly: unlike min/max stats (footer-only),
-  * blooms need the COLUMN DATA — one distributed scan of the dir per
-  * sidecar write (the price Delta pays computing stats at write
-  * time). The scan emits per-partition partial blooms that OR-merge
-  * per file (a parquet file may span Spark partitions), sized from a
-  * footer row-count pass at `bitsPerRow` bits (default 10 ≈ 1% fpp
-  * with the 7-hash double-hashing scheme below). The sidecar is
-  * streamed to disk one file-entry at a time — driver memory holds
-  * one bloom, not the dir's worth.
+  * Build cost: blooms need the COLUMN DATA, not footers, so the write
+  * tasks hash each tracked value as they write it ([[StatsWrite]]) and
+  * size each file's filter from its exact row count at [[BitsPerRow]]
+  * bits (≈ 1% fpp with the 7-hash double-hashing scheme below) — the
+  * price Delta pays computing stats at write time, with no second scan
+  * of the dir.
   *
   * Probe cost: a point probe must consult EVERY file's bloom, so a
   * read costs Σ bloom bytes of the dir (~0.15% of table bytes at 10
   * bits/row) — paid once per immutable dir and memoized in-JVM for
   * the serving case. The knob a 100 TB deployment turns is
-  * `bitsPerRow` (fpp vs sidecar bytes), not the design. */
+  * [[BitsPerRow]] (fpp vs sidecar bytes), not the design. */
 object ZoneBlooms {
 
   def sidecarName(col: String): String = s"_bloom-$col.bin"
@@ -47,8 +44,7 @@ object ZoneBlooms {
 
   /** Fixed-size Bloom filter over 64-bit hashes: double hashing
     * (Kirsch–Mitzenmacher) with `k` probes into a `Long`-word bit
-    * array. Merge across partitions is bitwise OR — sizes agree per
-    * file by construction. */
+    * array, one per written file. */
   final class SimpleBloom(val k: Int, val words: Array[Long])
       extends Serializable {
     private def nBits = words.length.toLong * 64
@@ -72,13 +68,6 @@ object ZoneBlooms {
       var i = 0
       while (i < k) { if (!get(h1 + i.toLong * h2)) return false; i += 1 }
       true
-    }
-    def orInPlace(o: SimpleBloom): SimpleBloom = {
-      require(o.words.length == words.length && o.k == k,
-        "bloom size mismatch — partials of one file must agree")
-      var i = 0
-      while (i < words.length) { words(i) |= o.words(i); i += 1 }
-      this
     }
   }
 
@@ -211,88 +200,12 @@ object ZoneBlooms {
     }
   }
 
-  private[sources] def bloomFor(rows: Long, bitsPerRow: Int): SimpleBloom = {
-    val bits = math.max(1024L, rows * bitsPerRow)
-    new SimpleBloom(7, new Array[Long](((bits + 63) / 64).toInt))
-  }
+  /** Filter bits per row: ≈ 1% fpp with the 7-hash scheme above. */
+  private[sources] val BitsPerRow = 10
 
-  /** Build and write per-file blooms for `cols` over every parquet
-    * file under `dataDir`: one footer pass for row counts (sizing),
-    * one distributed data scan emitting per-partition partials,
-    * OR-merged per file and streamed into the sidecars. */
-  def writeSidecar(spark: SparkSession, dataDir: String,
-      cols: Seq[String], bitsPerRow: Int = 10): Unit = {
-    require(cols.nonEmpty, "bloom sidecar needs at least one column")
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new Path(dataDir)
-    val f = dir.getFileSystem(conf)
-    val df0 = graft.Tables.readParquetCached(spark, dataDir)
-    cols.foreach(c => require(df0.columns.contains(c),
-      s"bloom column '$c' not in $dataDir (has ${df0.columns.mkString(",")})"))
-    // footer row counts → per-file bloom sizes (broadcast; tiny)
-    val rowCounts: Map[String, Long] = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      def files(p: Path): Seq[Path] = f.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) files(st.getPath)
-        else if (n.endsWith(".parquet")) Seq(st.getPath)
-        else Nil
-      }
-      files(dir).map { p =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-        // scheme-free absolute path: input_file_name() URIs and
-        // Hadoop Path strings disagree on slashes/scheme, the bare
-        // path is the common denominator
-        try p.toUri.getPath -> r.getRecordCount finally r.close()
-      }.toMap
-    }
-    require(rowCounts.nonEmpty, s"bloom sidecar over empty data dir $dataDir")
-    val bcCounts = spark.sparkContext.broadcast(rowCounts)
-    val bpr = bitsPerRow
-    val colsV = cols.toVector
-    // one scan: per-partition partial blooms keyed by (file, col)
-    val partials = df0
-      .select(input_file_name().as("__f") +: colsV.map(col): _*)
-      .rdd.mapPartitions { it =>
-        val acc = scala.collection.mutable.HashMap
-          .empty[(String, String), SimpleBloom]
-        it.foreach { row =>
-          // input_file_name is a (possibly percent-encoded) URI;
-          // normalize to the scheme-free path the row counts key by
-          val file = new Path(java.net.URLDecoder.decode(
-            row.getString(0), "UTF-8")).toUri.getPath
-          var i = 0
-          while (i < colsV.length) {
-            val b = acc.getOrElseUpdate((file, colsV(i)),
-              bloomFor(bcCounts.value.getOrElse(file,
-                bcCounts.value.values.max), bpr))
-            b.put(hashValue(row.get(i + 1)))
-            i += 1
-          }
-        }
-        acc.iterator
-      }
-      .reduceByKey(_ orInPlace _)
-      // deterministic (file, col) order: sidecar bytes must not depend
-      // on shuffle-read order, so a write-time-emitted sidecar
-      // ([[StatsWrite]]) can be byte-compared against this path
-      .sortBy(_._1)
-    // stream the sidecars: one bloom in driver memory at a time
-    val byCol = colsV.map(c => c -> f.create(
-      new Path(dir, sidecarName(c)), true)).toMap
-    try {
-      byCol.values.foreach { out =>
-        out.writeUTF(Magic)
-      }
-      val dirPath = dir.toUri.getPath
-      partials.toLocalIterator.foreach { case ((file, c), bloom) =>
-        val rel = file.stripPrefix(dirPath).stripPrefix("/")
-        writeEntry(byCol(c), rel, bloom)
-      }
-    } finally byCol.values.foreach(_.close())
+  private[sources] def bloomFor(rows: Long): SimpleBloom = {
+    val bits = math.max(1024L, rows * BitsPerRow)
+    new SimpleBloom(7, new Array[Long](((bits + 63) / 64).toInt))
   }
 
   private def writeEntry(out: org.apache.hadoop.fs.FSDataOutputStream,
@@ -306,8 +219,8 @@ object ZoneBlooms {
   /** Write one column's sidecar from already-computed per-file blooms
     * — the WRITE-TIME emission path ([[StatsWrite]]): the blooms were
     * built by the tasks that wrote the files, so no second data scan
-    * happens here. Entries must arrive in deterministic (sorted-file)
-    * order for byte-identity with [[writeSidecar]]. */
+    * happens here. Entries arrive in sorted-file order, so the bytes
+    * are deterministic. */
   private[sources] def writeSidecarFromParts(f: FileSystem, dataDir: Path,
       col: String, entries: Seq[(String, SimpleBloom)]): Unit = {
     val out = f.create(new Path(dataDir, sidecarName(col)), true)

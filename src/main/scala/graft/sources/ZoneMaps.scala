@@ -3,8 +3,6 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-import scala.jdk.CollectionConverters._
-
 /** File-level zone maps for versioned-lake tables — Iceberg/Delta-style
   * data skipping on top of the manifest layout.
   *
@@ -13,19 +11,20 @@ import scala.jdk.CollectionConverters._
   * 100 TB the scanner still has to OPEN every file's footer to learn
   * that 99% of them are irrelevant: one metadata round-trip per file,
   * serialized through the driver's split planning. A zone map distills
-  * those same footer statistics into ONE driver-readable sidecar per
-  * data dir at publish time, so a range predicate prunes the file list
-  * before Spark ever lists, opens, or schedules anything: planning
-  * cost ∝ matching files, not table files. This is exactly the role of
-  * Iceberg's manifest column bounds / Delta's per-file stats.
+  * the same bounds into ONE driver-readable sidecar per data dir, which
+  * the write tasks emit at publish time ([[StatsWrite]]), so a range
+  * predicate prunes the file list before Spark ever lists, opens, or
+  * schedules anything: planning cost ∝ matching files, not table
+  * files. This is exactly the role of Iceberg's manifest column bounds
+  * / Delta's per-file stats.
   *
   * Placement: the sidecar lives INSIDE the immutable data dir
   * (`_zonemap.tsv` — the `_` prefix hides it from Spark's file index,
   * like `_SUCCESS`). Stats thereby share the data's lifecycle by
   * construction: a manifest carry-forward carries them, GC refcounting
   * protects them, and they can never describe any bytes other than the
-  * dir they sit in. Written after the parquet `_SUCCESS` check and
-  * before the version's manifest/marker, so a crash mid-publish leaves
+  * dir they sit in. Written before the data dir's `_SUCCESS` and the
+  * version's manifest/marker, so a crash mid-publish leaves
   * only an uncommitted dir — readers never see data without its
   * declared stats or vice versa.
   *
@@ -38,10 +37,10 @@ import scala.jdk.CollectionConverters._
   *    that PROVE disjointness skip a file. All-null chunks are skipped
   *    for range predicates (NULL matches no range) — the one exactness
   *    claim [[ZoneMapSpec]] pins with a planted all-null file.
-  *  - Collecting stats for a column absent from every footer (a typo,
-  *    or a partition column — dir-encoded, so footers never carry it)
-  *    fails the PUBLISH loudly rather than producing a sidecar that
-  *    can never prune.
+  *  - Tracking a column the written files do not carry (a typo, or a
+  *    partition column — dir-encoded, so files never carry it), or a
+  *    zone map over an empty frame, fails the PUBLISH loudly rather
+  *    than producing a sidecar that can never prune.
   *  - String bounds compare as unsigned UTF-8 bytes — parquet's
   *    UNSIGNED sort order for UTF8 — not `String.compareTo` (UTF-16
   *    code units), which disagrees beyond the BMP.
@@ -70,176 +69,6 @@ object ZoneMaps {
   final case class ColStats(tpe: String, flag: String, min: String, max: String)
   final case class FileStats(relPath: String, cols: Map[String, ColStats])
 
-  /** Hadoop `Configuration` is Writable, not Java-serializable; this
-    * wrapper ships it into the distributed footer walk. (Spark has an
-    * internal equivalent; this stays on public API only.) */
-  private[sources] final class SerConf(
-      @transient var value: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
-  // ------------------------------------------------------- footer walk
-
-  private def parquetFiles(f: FileSystem, dir: Path): Seq[Path] = {
-    def walk(p: Path): Seq[Path] = f.listStatus(p).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Nil
-      else if (st.isDirectory) walk(st.getPath)
-      else if (n.endsWith(".parquet")) Seq(st.getPath)
-      else Nil
-    }
-    // sorted: listStatus order is filesystem-dependent, and the
-    // sidecar bytes must be deterministic (the write-time emission
-    // path emits in sorted-name order and is byte-compared to this)
-    walk(dir).sortBy(_.toString)
-  }
-
-  /** Read ONE file's footer and fold its row-group statistics into
-    * per-column bounds. Metadata-only I/O — no data pages touched. */
-  private def fileStats(conf: org.apache.hadoop.conf.Configuration,
-      dir: Path, file: Path, cols: Seq[String]): FileStats = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val chunks = reader.getFooter.getBlocks.asScala
-        .flatMap(_.getColumns.asScala)
-        .groupBy(_.getPath.toDotString)
-      val out = cols.flatMap { c =>
-        chunks.get(c).map { cc =>
-          val prim = cc.head.getPrimitiveType
-          // DECIMAL rides three physical encodings (Spark: INT32 for
-          // p≤9, INT64 for p≤18, FIXED_LEN_BYTE_ARRAY beyond or in
-          // legacy mode) — all carry exact unscaled stats; decode to
-          // BigDecimal bounds rather than (a) never pruning FLBA or
-          // (b) comparing UNSCALED ints against the caller's scaled
-          // probe, which would prune files that match (the one way a
-          // zone map can lose rows).
-          val decScale: Option[Int] = prim.getLogicalTypeAnnotation match {
-            case d: org.apache.parquet.schema.LogicalTypeAnnotation
-                  .DecimalLogicalTypeAnnotation => Some(d.getScale)
-            case _ => None
-          }
-          // DATE/TIMESTAMP annotations get their own tpe so selection
-          // can convert calendar probe values (LocalDate / Instant /
-          // Timestamp) to the column's stored unit — the stats
-          // themselves are plain longs (epoch days / millis / micros /
-          // nanos) and fold through the long accumulator
-          val timeTpe: Option[String] = prim.getLogicalTypeAnnotation match {
-            case _: org.apache.parquet.schema.LogicalTypeAnnotation
-                  .DateLogicalTypeAnnotation => Some("date")
-            case t: org.apache.parquet.schema.LogicalTypeAnnotation
-                  .TimestampLogicalTypeAnnotation =>
-              t.getUnit match {
-                case org.apache.parquet.schema.LogicalTypeAnnotation
-                      .TimeUnit.MILLIS => Some("tsmillis")
-                case org.apache.parquet.schema.LogicalTypeAnnotation
-                      .TimeUnit.MICROS => Some("tsmicros")
-                case org.apache.parquet.schema.LogicalTypeAnnotation
-                      .TimeUnit.NANOS => Some("tsnanos")
-                case _ => None
-              }
-            case _ => None
-          }
-          val tpe = prim.getPrimitiveTypeName match {
-            case _ if decScale.isDefined => "decimal"
-            case INT32 | INT64 if timeTpe.isDefined => timeTpe.get
-            case INT32 | INT64 => "long"
-            case FLOAT | DOUBLE => "double"
-            case BINARY => "string"
-            case _ => "opaque" // e.g. FLBA UUIDs / INT96
-          }
-          if (tpe == "opaque") c -> ColStats(tpe, "U", "", "")
-          else {
-            // fold row groups: every group must contribute usable
-            // stats or the file is UNKNOWN; a group that is entirely
-            // null contributes "no rows in range"
-            var minL = Long.MaxValue; var maxL = Long.MinValue
-            var minD = Double.PositiveInfinity; var maxD = Double.NegativeInfinity
-            var minB: Array[Byte] = null; var maxB: Array[Byte] = null
-            var minU: java.math.BigInteger = null // decimal, unscaled
-            var maxU: java.math.BigInteger = null
-            var sawValues = false
-            var unknown = false
-            cc.foreach { chunk =>
-              val st: org.apache.parquet.column.statistics.Statistics[_] =
-                chunk.getStatistics
-              val allNull = st != null && st.isNumNullsSet &&
-                st.getNumNulls == chunk.getValueCount
-              if (st == null || (!st.hasNonNullValue && !allNull)) unknown = true
-              else if (!allNull) {
-                sawValues = true
-                tpe match {
-                  case "long" | "date" | "tsmillis" | "tsmicros" | "tsnanos" =>
-                    val lo = st.genericGetMin.asInstanceOf[Number].longValue
-                    val hi = st.genericGetMax.asInstanceOf[Number].longValue
-                    if (lo < minL) minL = lo
-                    if (hi > maxL) maxL = hi
-                  case "double" =>
-                    val lo = st.genericGetMin.asInstanceOf[Number].doubleValue
-                    val hi = st.genericGetMax.asInstanceOf[Number].doubleValue
-                    if (lo < minD) minD = lo
-                    if (hi > maxD) maxD = hi
-                  case "string" =>
-                    val lo = st.genericGetMin
-                      .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-                    val hi = st.genericGetMax
-                      .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes
-                    if (minB == null || unsignedLt(lo, minB)) minB = lo
-                    if (maxB == null || unsignedLt(maxB, hi)) maxB = hi
-                  case "decimal" =>
-                    // INT32/INT64 backings carry the unscaled value as
-                    // a plain number; BINARY/FLBA as big-endian two's
-                    // complement — exactly BigInteger's byte form
-                    def unscaled(v: Any): java.math.BigInteger = v match {
-                      case n: Number =>
-                        java.math.BigInteger.valueOf(n.longValue)
-                      case b: org.apache.parquet.io.api.Binary =>
-                        new java.math.BigInteger(b.getBytes)
-                    }
-                    val lo = unscaled(st.genericGetMin)
-                    val hi = unscaled(st.genericGetMax)
-                    if (minU == null || lo.compareTo(minU) < 0) minU = lo
-                    if (maxU == null || maxU.compareTo(hi) < 0) maxU = hi
-                }
-              }
-            }
-            val stats =
-              if (unknown) ColStats(tpe, "U", "", "")
-              else if (!sawValues) ColStats(tpe, "N", "", "")
-              else tpe match {
-                case "long" | "date" | "tsmillis" | "tsmicros" | "tsnanos" =>
-                  ColStats(tpe, "K", minL.toString, maxL.toString)
-                case "double" => ColStats(tpe, "K",
-                  java.lang.Double.doubleToRawLongBits(minD).toString,
-                  java.lang.Double.doubleToRawLongBits(maxD).toString)
-                case "string" =>
-                  val enc = java.util.Base64.getEncoder
-                  ColStats(tpe, "K", enc.encodeToString(minB), enc.encodeToString(maxB))
-                case "decimal" =>
-                  val s = decScale.get
-                  ColStats(tpe, "K",
-                    new java.math.BigDecimal(minU, s).toPlainString,
-                    new java.math.BigDecimal(maxU, s).toPlainString)
-              }
-            c -> stats
-          }
-        }
-      }.toMap
-      val rel = file.toString.stripPrefix(dir.toString).stripPrefix("/")
-      FileStats(rel, out)
-    } finally reader.close()
-  }
-
   private[sources] def unsignedLt(a: Array[Byte], b: Array[Byte]): Boolean = {
     var i = 0
     val n = math.min(a.length, b.length)
@@ -251,26 +80,16 @@ object ZoneMaps {
     a.length < b.length
   }
 
-  /** Collect per-file bounds for `cols` over every parquet file under
-    * `dataDir` and write the sidecar. Fails loudly if a column appears
-    * in NO footer (typo / partition column) — see object scaladoc. */
-  def writeSidecar(spark: SparkSession, dataDir: String,
-      cols: Seq[String]): Unit = {
-    require(cols.nonEmpty, "zone map needs at least one column")
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new Path(dataDir)
-    val f = dir.getFileSystem(conf)
-    val files = parquetFiles(f, dir)
-    require(files.nonEmpty, s"zone map over empty data dir $dataDir")
-    val stats = collectStats(spark, conf, dir, files, cols)
-    cols.foreach { c =>
-      require(stats.exists(_.cols.contains(c)),
-        s"zone map column '$c' appears in no parquet footer under " +
-          s"$dataDir — misspelled, or a partition column (dir-encoded, " +
-          "use partition pruning instead)")
-    }
+  /** Write `dataDir`'s sidecar from per-file bounds, in the order
+    * given: the one writer of the format [[readSidecar]] reads. Entry
+    * paths are relative to `dataDir`, as the bloom sidecars' are, so a
+    * lake copied or moved to another root prunes into its own files. */
+  private[sources] def writeSidecarFromParts(f: FileSystem, dataDir: Path,
+      cols: Seq[String], files: Seq[FileStats]): Unit = {
     val sb = new StringBuilder("graft-zonemap\tv1\n")
-    stats.foreach { fst =>
+    files.foreach { fst =>
+      require(!new Path(fst.relPath).isAbsolute,
+        s"zone map entry ${fst.relPath} is not relative to $dataDir")
       cols.foreach { c =>
         val cs = fst.cols.getOrElse(c, ColStats("long", "U", "", ""))
         sb.append(fst.relPath).append('\t').append(c).append('\t')
@@ -278,36 +97,9 @@ object ZoneMaps {
           .append(cs.min).append('\t').append(cs.max).append('\n')
       }
     }
-    val out = f.create(new Path(dir, SidecarName), true)
+    val out = f.create(new Path(dataDir, SidecarName), true)
     try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
   }
-
-  /** The per-file footer walk behind [[writeSidecar]], DISTRIBUTED: a
-    * 100 TB table has 10⁵–10⁶ files, and one driver-serial open-footer
-    * round-trip per file would serialize hours of metadata I/O through
-    * a single thread at exactly the scale the sidecar exists for. The
-    * file list fans out as a tiny RDD, each task opens its footers
-    * against its own FileSystem handle, and only the per-file bound
-    * rows (a few hundred bytes each) come back — the same
-    * stats-collection shape as Delta's per-file write-time stats.
-    * Element order is preserved by `parallelize`/`collect`, so the
-    * sidecar bytes are identical to the serial walk's; dirs below the
-    * cutoff skip the job-launch latency entirely (a spec lake
-    * publishes many 1–8-file dirs). */
-  private def collectStats(spark: SparkSession,
-      conf: org.apache.hadoop.conf.Configuration, dir: Path,
-      files: Seq[Path], cols: Seq[String]): Seq[FileStats] =
-    if (files.size < 16) files.map(fileStats(conf, dir, _, cols))
-    else {
-      val ser = new SerConf(conf)
-      val dirStr = dir.toString
-      val colsV = cols.toVector
-      val slices = math.min(files.size,
-        math.max(1, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(files.map(_.toString), slices)
-        .map(p => fileStats(ser.value, new Path(dirStr), new Path(p), colsV))
-        .collect().toSeq
-    }
 
   /** Sidecar for a data dir, if present and well-formed. */
   def readSidecar(spark: SparkSession, dataDir: String): Option[Seq[FileStats]] = {

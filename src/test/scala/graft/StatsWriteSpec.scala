@@ -4,12 +4,14 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{StatsWrite, ZoneBlooms, ZoneMaps}
+import graft.sources.{SidecarRescan, StatsWrite, Versioned, ZoneBlooms, ZoneMaps}
+import graft.sources.Versioned.TableSpec
 
 /** [[graft.sources.StatsWrite]] — write-task sidecar emission (r17).
   * The load-bearing claim is BYTE-IDENTITY: sidecars emitted by the
-  * write tasks must equal, byte for byte, what the legacy re-scan
-  * collectors produce over the same written files — otherwise the
+  * write tasks must equal, byte for byte, what the re-scan reference
+  * ([[graft.sources.SidecarRescan]]: a footer walk and a column
+  * re-scan) produces over the same written files — otherwise the
   * instrumented path could silently prune differently than the path
   * every probe family was verified against. */
 class StatsWriteSpec extends SparkSpec {
@@ -51,9 +53,9 @@ class StatsWriteSpec extends SparkSpec {
     val zm1 = bytes(s"$dir/${ZoneMaps.SidecarName}")
     val bl1 = bloomCols.map(c => c -> bytes(s"$dir/${ZoneBlooms.sidecarName(c)}"))
     // regenerate with the LEGACY collectors over the same files
-    ZoneMaps.writeSidecar(spark, dir, statsCols)
+    SidecarRescan.zoneMap(spark, dir, statsCols)
     bloomCols.foreach { c => // one col at a time exercises ordering too
-      ZoneBlooms.writeSidecar(spark, dir, Seq(c))
+      SidecarRescan.blooms(spark, dir, Seq(c))
     }
     assert(bytes(s"$dir/${ZoneMaps.SidecarName}") == zm1,
       "zone-map sidecar diverged from the footer walk")
@@ -112,7 +114,7 @@ class StatsWriteSpec extends SparkSpec {
       .repartition(2)
     StatsWrite.write(spark, d, dir, Seq("s", "b"), Nil)
     val zm1 = bytes(s"$dir/${ZoneMaps.SidecarName}")
-    ZoneMaps.writeSidecar(spark, dir, Seq("s", "b"))
+    SidecarRescan.zoneMap(spark, dir, Seq("s", "b"))
     assert(bytes(s"$dir/${ZoneMaps.SidecarName}") == zm1)
     val stats = ZoneMaps.readSidecar(spark, dir).get
     stats.foreach { fs =>
@@ -143,8 +145,8 @@ class StatsWriteSpec extends SparkSpec {
     // sidecar byte identity with the legacy collectors over this dir
     val zm1 = bytes(s"$dir/${ZoneMaps.SidecarName}")
     val bl1 = bytes(s"$dir/${ZoneBlooms.sidecarName("name")}")
-    ZoneMaps.writeSidecar(spark, dir, Seq("id", "amount"))
-    ZoneBlooms.writeSidecar(spark, dir, Seq("name"))
+    SidecarRescan.zoneMap(spark, dir, Seq("id", "amount"))
+    SidecarRescan.blooms(spark, dir, Seq("name"))
     assert(bytes(s"$dir/${ZoneMaps.SidecarName}") == zm1,
       "partitioned zone-map sidecar diverged from the footer walk")
     assert(bytes(s"$dir/${ZoneBlooms.sidecarName("name")}") == bl1,
@@ -168,7 +170,7 @@ class StatsWriteSpec extends SparkSpec {
         .otherwise(expr(
           "date_add(date'2024-02-01', cast(id % 7 as int))")).as("pd"))
     StatsWrite.writePartitioned(spark, d, dir, Seq("pd"),
-      Seq("id"), Seq("name"), bitsPerRow = 10, targetRowsPerFile = 500)
+      Seq("id"), Seq("name"), targetRowsPerFile = 500)
     // the hot value is MANY files written by MULTIPLE tasks (the final
     // name carries the writing task's index: part-IIIII-JJJJ-job)
     val hot = new java.io.File(s"$dir/pd=2024-01-01").list()
@@ -200,8 +202,8 @@ class StatsWriteSpec extends SparkSpec {
     // re-scan over the same files
     val zm1 = bytes(s"$dir/${ZoneMaps.SidecarName}")
     val bl1 = bytes(s"$dir/${ZoneBlooms.sidecarName("name")}")
-    ZoneMaps.writeSidecar(spark, dir, Seq("id"))
-    ZoneBlooms.writeSidecar(spark, dir, Seq("name"))
+    SidecarRescan.zoneMap(spark, dir, Seq("id"))
+    SidecarRescan.blooms(spark, dir, Seq("name"))
     assert(bytes(s"$dir/${ZoneMaps.SidecarName}") == zm1,
       "skew-split zone-map sidecar diverged from the footer walk")
     assert(bytes(s"$dir/${ZoneBlooms.sidecarName("name")}") == bl1,
@@ -234,7 +236,7 @@ class StatsWriteSpec extends SparkSpec {
       map(lit("k"), col("id").cast("string")).as("attrs"),
       when(col("id") < 1000, lit(1)).otherwise(lit(2)).as("pk"))
     StatsWrite.writePartitioned(spark, d, dir, Seq("pk"),
-      Seq("id"), Nil, bitsPerRow = 10, targetRowsPerFile = 300)
+      Seq("id"), Nil, targetRowsPerFile = 300)
     val hot = new java.io.File(s"$dir/pk=1").list()
       .filter(_.endsWith(".parquet")).toSeq
     assert(hot.size >= 3, s"hot value not split despite map column: $hot")
@@ -279,8 +281,8 @@ class StatsWriteSpec extends SparkSpec {
         val zm1 = bytes(s"$dir/${ZoneMaps.SidecarName}")
         val b1 = bytes(s"$dir/${ZoneBlooms.sidecarName("k")}")
         val b2 = bytes(s"$dir/${ZoneBlooms.sidecarName("name")}")
-        ZoneMaps.writeSidecar(spark, dir, statsCols)
-        ZoneBlooms.writeSidecar(spark, dir, Seq("k", "name"))
+        SidecarRescan.zoneMap(spark, dir, statsCols)
+        SidecarRescan.blooms(spark, dir, Seq("k", "name"))
         assert(bytes(s"$dir/${ZoneMaps.SidecarName}") == zm1, s"case $i zm")
         assert(bytes(s"$dir/${ZoneBlooms.sidecarName("k")}") == b1, s"case $i bk")
         assert(bytes(s"$dir/${ZoneBlooms.sidecarName("name")}") == b2,
@@ -332,8 +334,8 @@ class StatsWriteSpec extends SparkSpec {
         // sidecars byte-identical to the legacy re-scan on every shape
         val zm1 = bytes(s"$dir/${ZoneMaps.SidecarName}")
         val bl1 = bytes(s"$dir/${ZoneBlooms.sidecarName("name")}")
-        ZoneMaps.writeSidecar(spark, dir, Seq("k"))
-        ZoneBlooms.writeSidecar(spark, dir, Seq("name"))
+        SidecarRescan.zoneMap(spark, dir, Seq("k"))
+        SidecarRescan.blooms(spark, dir, Seq("name"))
         assert(bytes(s"$dir/${ZoneMaps.SidecarName}") == zm1, s"case $i zm")
         assert(bytes(s"$dir/${ZoneBlooms.sidecarName("name")}") == bl1,
           s"case $i bloom")
@@ -347,6 +349,61 @@ class StatsWriteSpec extends SparkSpec {
       StatsWrite.write(spark, e, dir, Seq("id"), Nil)
     }
     assert(ex.getMessage.contains("zone map"), ex.getMessage)
+  }
+
+  test("empty frames: flat bloom-only writes one schema file and a header-only sidecar; the rest refuse and commit nothing") {
+    val e = fixture.filter(col("id") < 0)
+    val ep = e.withColumn("pd", col("d"))
+    // flat bloom-only: _SUCCESS, one zero-row file that carries the
+    // schema, and a sidecar holding only its header
+    val dir = mkDir("emptybloom")
+    StatsWrite.write(spark, e, dir, Nil, Seq("id"))
+    assert(new java.io.File(s"$dir/_SUCCESS").exists())
+    val files = new java.io.File(dir).list().filter(_.endsWith(".parquet"))
+    assert(files.length == 1, files.mkString(","))
+    assert(spark.read.parquet(s"$dir/${files.head}").count() == 0)
+    assert(Tables.readParquetCached(spark, dir).columns.toSeq ==
+      fixture.columns.toSeq)
+    assert(ZoneBlooms.readSidecar(spark, dir, "id").contains(Map.empty))
+    // partitioned, with stats or bloom-only: no partition value, no file
+    val ex = intercept[Exception] {
+      StatsWrite.writePartitioned(spark, ep, mkDir("emptyps"), Seq("pd"),
+        Seq("id"), Nil)
+    }
+    assert(ex.getMessage.contains("zone map"), ex.getMessage)
+    intercept[Exception] {
+      StatsWrite.writePartitioned(spark, ep, mkDir("emptypb"), Seq("pd"),
+        Nil, Seq("id"))
+    }
+    // a publish over each refusing case commits no version; the
+    // bloom-only flat one commits an empty table
+    Seq(TableSpec("t", e, statsCols = Seq("id")),
+        TableSpec("t", ep, partitionBy = Seq("pd"), statsCols = Seq("id")),
+        TableSpec("t", ep, partitionBy = Seq("pd"), bloomCols = Seq("id")))
+      .zipWithIndex.foreach { case (t, i) =>
+        val base = mkDir(s"emptypub$i")
+        intercept[Exception](Versioned.publish(spark, base, Seq(t)))
+        assert(Versioned.currentVersion(spark, base).isEmpty, s"case $i")
+      }
+    val base = mkDir("emptypubok")
+    Versioned.publish(spark, base, Seq(TableSpec("t", e, bloomCols = Seq("id"))))
+    val back = Versioned.read(spark, base, "t")
+    assert(back.columns.toSeq == fixture.columns.toSeq && back.count() == 0)
+  }
+
+  test("census: a flat tracked write is one job, one task per input partition; the partitioned write keeps its jobs") {
+    val flat = spark.range(0, 300, 1, 3).select(col("id"),
+      concat(lit("n"), col("id") % 7).as("name"))
+    val (_, u) = graft.obs.Meter.measure(spark) {
+      StatsWrite.write(spark, flat, mkDir("censusflat"), Seq("id"), Seq("name"))
+    }
+    assert((u.jobs, u.stages, u.tasks) == (1, 1, 3), u)
+    val part = flat.withColumn("pd", col("id") % 3)
+    val (_, up) = graft.obs.Meter.measure(spark) {
+      StatsWrite.writePartitioned(spark, part, mkDir("censuspart"), Seq("pd"),
+        Seq("id"), Seq("name"))
+    }
+    assert((up.jobs, up.stages, up.tasks) == (4, 4, 8), up)
   }
 
   test("spill dir resolves through Spark's own local-dir machinery first") {

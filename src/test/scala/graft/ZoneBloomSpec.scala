@@ -221,7 +221,7 @@ class ZoneBloomSpec extends SparkSpec {
     val dataDir = new Path(base, entries.head._2).toString
     val sidecar = s"$dataDir/${graft.sources.ZoneBlooms.sidecarName("dt")}"
     val b1 = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(sidecar)).toSeq
-    graft.sources.ZoneBlooms.writeSidecar(spark, dataDir, Seq("dt"))
+    graft.sources.SidecarRescan.blooms(spark, dataDir, Seq("dt"))
     val b2 = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(sidecar)).toSeq
     assert(b1 == b2, "date bloom sidecar diverged between write paths")
   }

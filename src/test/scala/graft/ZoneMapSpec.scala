@@ -226,10 +226,10 @@ class ZoneMapSpec extends SparkSpec {
     assert(selS == selD, "string date probe must select like LocalDate")
   }
 
-  test("distributed stats collection (>=16 files) prunes like the serial walk") {
+  test("a 20-file write-time sidecar prunes correctly") {
     val base = mkBase()
-    // 20 files → writeSidecar takes the parallelize path; the sidecar
-    // must still describe every file (order preserved by collect)
+    // 20 files, one per write task: the sidecar must describe every
+    // file, in path order
     val df = spark.range(0, 2000)
       .select(col("id").as("k"), (col("id") * 3).as("v"))
       .repartitionByRange(20, col("k"))
@@ -242,6 +242,24 @@ class ZoneMapSpec extends SparkSpec {
     assert(collectSet(Versioned.readPruned(spark, base, "t", "k", 100L, 199L))
       == collectSet(Versioned.read(spark, base, "t")
         .filter(col("k") >= 100 && col("k") <= 199)))
+  }
+
+  test("a copied lake prunes into its own files after the original is deleted") {
+    val base = mkBase()
+    Versioned.publish(spark, base,
+      Seq(TableSpec("t", rangedDf, statsCols = Seq("k"))))
+    val moved = Files.createTempDirectory("graft-zonemap-moved").toString + "/lake"
+    val conf = spark.sessionState.newHadoopConf()
+    val f = new Path(base).getFileSystem(conf)
+    assert(org.apache.hadoop.fs.FileUtil.copy(f, new Path(base), f,
+      new Path(moved), true, conf))
+    assert(!f.exists(new Path(base)))
+    val Some((_, sel, total)) =
+      Versioned.prunedFilesAt(spark, moved, "t", 1L, "k", 110L, 130L)
+    assert(total == 4 && sel.size == 1, s"selected ${sel.size} of $total")
+    assert(collectSet(Versioned.readPruned(spark, moved, "t", "k", 110L, 130L))
+      == collectSet(Versioned.read(spark, moved, "t")
+        .filter(col("k") >= 110 && col("k") <= 130)))
   }
 
   test("a provably-empty range returns an empty frame with the table schema") {
